@@ -57,18 +57,20 @@ class SQLPipelineExecutor:
     #: (sources/kafka_wire.py) instead of the JVM connector — the
     #: jar-free e2e path; the JVM connector remains the scale path.
     wire_broker: tuple[str, int] | None = None
-    #: topic -> avro schema json the wire sink encoded with (the
-    #: runner's consume/validate step decodes with the same schema).
-    wire_sink_schemas: dict[str, str] = field(default_factory=dict)
+    #: topic -> avro schema json this run wrote the topic with: the
+    #: runner's producer fills in the input topic, the wire sink each
+    #: topic it encodes. The wire source decodes with it when no
+    #: registry answers; the runner's consume step decodes with it.
+    wire_writer_schemas: dict[str, str] = field(default_factory=dict)
     #: topic -> rows actually produced to that topic by the wire sink;
     #: the runner's expected-count smart stop reads THIS, not the sum
     #: of every statement's rows_written (which also counts non-Kafka
     #: batch materializations and would inflate the expectation past
     #: what the output topic can ever hold).
     wire_sink_counts: dict[str, int] = field(default_factory=dict)
-    #: topic -> registered Schema Registry id (runner step 6): stamped
-    #: into the Confluent wire header by the sink; the source resolves
-    #: writer schemas back through the registry by this id.
+    #: topic -> registered Schema Registry id (runner step 6). When
+    #: set, the run has a registry: the wire sink registers the schema
+    #: it encodes with and stamps that id into the wire header.
     wire_schema_ids: dict[str, int] = field(default_factory=dict)
 
     # --- table materialization ------------------------------------------------
@@ -148,16 +150,17 @@ class SQLPipelineExecutor:
 
     def _kafka_wire_source(self, spec: ddl_mod.TableSpec) -> DataFrame:
         """Batch materialization of a Kafka topic over the pure-Python
-        wire client (round-12 jar-free e2e): Metadata for the partition
-        list, Fetch v4 each partition to its high watermark, then the
-        SAME decode_confluent_avro_py the JVM path falls back to. Demo/
-        validation scale (the payload set is collected on the driver
-        before parallelize); 100 TB ingestion is the JVM connector."""
+        wire client: Metadata for the partition list, Fetch v4 each
+        partition to its high watermark, then `decode_local` — the
+        Avro codec runs on the driver, which already holds every
+        fetched byte, and the decoded rows reach Spark in one Arrow
+        `createDataFrame`. Demo/validation scale; bulk ingestion is the
+        JVM connector, whose fallback codec runs distributed."""
         from pyspark.sql.types import _parse_datatype_string
 
         from pipegen_spark.schema.avsc import struct_to_avro
         from pipegen_spark.sources.kafka_wire import KafkaWireClient
-        from pipegen_spark.streaming.wire import decode_confluent_avro_py
+        from pipegen_spark.streaming.wire import decode_local
 
         host, port = self.wire_broker
         topic = spec.options.get("topic", spec.name)
@@ -183,34 +186,35 @@ class SQLPipelineExecutor:
                         break
         finally:
             client.close()
-        df = self.spark.createDataFrame(
-            [(v,) for v in values], "value binary"
-        )
         st_type = _parse_datatype_string(spec.schema_ddl())
-        # Writer-schema resolution — the Confluent contract: the wire
-        # header's schema id indexes the registry; the reader decodes
-        # with the WRITER's schema (a DDL-derived guess has different
-        # union shapes and misparses). Fall back to the DDL-derived
-        # schema when no registry answers (e.g. reading back our own
-        # sink's topic, which encoded with exactly that shape).
+        # Writer-schema resolution — the Confluent contract: the reader
+        # decodes with the WRITER's schema (a DDL-derived guess has
+        # different union shapes and misparses). In order: the registry
+        # by the header's schema id; the schema this run wrote the topic
+        # with; the DDL-derived schema (a topic written by this DDL's
+        # own sink, e.g. by an earlier run).
         avro_json = None
         if values:
             sid = int.from_bytes(values[0][1:5], "big")
             reg_url = self.variables.get("SCHEMA_REGISTRY_URL", "")
             if reg_url and sid > 0:
-                try:
-                    from pipegen_spark.sources.registry import (
-                        SchemaRegistryClient,
-                    )
+                from pipegen_spark.sources.registry import (
+                    RegistryError,
+                    SchemaRegistryClient,
+                )
 
+                try:
                     avro_json = SchemaRegistryClient(
                         reg_url, timeout=2.0
                     ).get_schema_by_id(sid)
-                except Exception:
+                except (RegistryError, OSError):
                     avro_json = None
-        if avro_json is None:
-            avro_json = struct_to_avro(st_type, spec.name)
-        return decode_confluent_avro_py(df, avro_json, st_type)
+        avro_json = (
+            avro_json
+            or self.wire_writer_schemas.get(topic)
+            or struct_to_avro(st_type, spec.name)
+        )
+        return decode_local(self.spark, values, avro_json, st_type)
 
     def _kafka_source(self, spec: ddl_mod.TableSpec) -> DataFrame:
         if self.wire_broker is not None:
@@ -268,25 +272,32 @@ class SQLPipelineExecutor:
         return df.count()
 
     def _kafka_wire_sink(self, df: DataFrame, spec: ddl_mod.TableSpec) -> int:
-        """Batch kafka sink over the wire client (round-12 jar-free
-        e2e): rows → Confluent-wire Avro `value` bytes (the SAME
-        encode_confluent_avro the streaming sink uses — Arrow-batched
-        AvroCodec), collected (demo scale) and produced to the topic as
-        magic-2 RecordBatches. Records the avro schema json per topic
-        so the runner's consume/validate step decodes identically."""
+        """Batch kafka sink over the wire client: rows → Confluent-wire
+        Avro `value` bytes by `encode_local` (one Arrow `toPandas()`,
+        then the Avro codec on the driver that produces the bytes),
+        produced to the topic as magic-2 RecordBatches. The schema is
+        derived from the result's Spark schema; when a registry answers
+        it is registered under `<topic>-value` and the returned id goes
+        into the wire header. Records the schema per topic so the
+        runner's consume/validate step decodes identically."""
         from pipegen_spark.schema.avsc import struct_to_avro
         from pipegen_spark.sources.kafka_wire import KafkaWireClient
-        from pipegen_spark.streaming.wire import encode_confluent_avro
+        from pipegen_spark.streaming.wire import encode_local
 
         host, port = self.wire_broker
         topic = spec.options.get("topic", spec.name)
         avro_json = struct_to_avro(df.schema, spec.name)
-        schema_id = self.wire_schema_ids.get(topic) or int(
-            spec.options.get("pipegen.schema-id", "1")
-        )
-        enc = encode_confluent_avro(df, avro_json, schema_id, df.columns)
-        values = [bytes(r.value) for r in enc.collect()]
-        self.wire_sink_schemas[topic] = avro_json
+        reg_url = self.variables.get("SCHEMA_REGISTRY_URL", "")
+        if reg_url and self.wire_schema_ids:  # the runner's registry answered
+            from pipegen_spark.sources.registry import SchemaRegistryClient
+
+            schema_id = SchemaRegistryClient(
+                reg_url, timeout=2.0
+            ).get_or_register(f"{topic}-value", avro_json)
+        else:
+            schema_id = int(spec.options.get("pipegen.schema-id", "1"))
+        values = encode_local(df, avro_json, schema_id, df.columns)
+        self.wire_writer_schemas[topic] = avro_json
         client = KafkaWireClient(host, port, client_id="pipegen-sink")
         try:
             ts = 0

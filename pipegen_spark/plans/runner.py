@@ -179,6 +179,10 @@ class PipelineRunner:
             checkpoint_root=os.path.join(res.workdir, "checkpoints"),
             wire_broker=wire,
             wire_schema_ids=wire_topic_ids,
+            # the schema the producer wrote the input topic with
+            wire_writer_schemas=(
+                {res.input_topic: schemas["input"].content} if wire else {}
+            ),
         )
         stmt_rows: list[dict] = []
         try:
@@ -287,7 +291,7 @@ class PipelineRunner:
             generate_from_avro_fields,
         )
         from pipegen_spark.sources.kafka_wire import KafkaWireClient
-        from pipegen_spark.streaming.wire import encode_confluent_avro
+        from pipegen_spark.streaming.wire import encode_local
 
         cfg = self.config
         input_schema = schemas.get("input")
@@ -299,13 +303,12 @@ class PipelineRunner:
         df = generate_from_avro_fields(
             self.spark, input_schema.fields, rows
         )
-        enc = encode_confluent_avro(
+        values = encode_local(
             df,
             input_schema.content,
             schema_id,
             [f["name"] for f in input_schema.fields],
         )
-        values = [bytes(r.value) for r in enc.collect()]
         tick = 0.2
         per_tick = max(1, int(cfg.message_rate * tick))
         client = KafkaWireClient(*wire, client_id="pipegen-producer")
@@ -344,9 +347,10 @@ class PipelineRunner:
         B19 lag monitor reads a real group after the run), poll Fetch
         v4 on the assigned partitions until the expected count
         arrives, the stream goes idle, or the hard timeout fires
-        (consumer.go:45-136 smart-stop), then decode with the schema
-        the sink actually encoded with and run the B12 rule validation
-        as one distributed pass."""
+        (consumer.go:45-136 smart-stop), then decode on the driver
+        (which holds the fetched bytes) with the schema the sink
+        actually encoded with, hand the rows to Spark in one Arrow
+        hop, and run the B12 rule validation as one aggregate."""
         import json as _json
 
         from pipegen_spark.sources.kafka_wire import KafkaWireClient
@@ -405,22 +409,17 @@ class PipelineRunner:
             "stop_reason": reason,
             "consumer_group": group,
         }
-        avro_json = executor.wire_sink_schemas.get(topic)
+        avro_json = executor.wire_writer_schemas.get(topic)
         if avro_json and values:
             from pipegen_spark.monitor.validator import (
                 ValidationRules,
                 validate,
             )
             from pipegen_spark.schema.avsc import avro_to_struct
-            from pipegen_spark.streaming.wire import (
-                decode_confluent_avro_py,
-            )
+            from pipegen_spark.streaming.wire import decode_local
 
             st_type = avro_to_struct(_json.loads(avro_json))
-            df = self.spark.createDataFrame(
-                [(v,) for v in values], "value binary"
-            )
-            decoded = decode_confluent_avro_py(df, avro_json, st_type)
+            decoded = decode_local(self.spark, values, avro_json, st_type)
             out["validation"] = validate(
                 decoded,
                 ValidationRules(

@@ -1,13 +1,18 @@
 """Confluent Schema Registry wire format: magic 0x00 + 4-byte big-endian
 schema id + Avro binary (internal/pipeline/producer.go:424-447).
 
-Body encode/decode prefers the JVM spark-avro `to_avro`/`from_avro`
-(whole-stage, zero Python) when the jar is on the classpath, and falls
-back automatically to the pure-Python Avro codec
-(schema/avro_codec.py) over Arrow-batched `mapInPandas` — the same
-role goavro plays for the reference's producer. The fallback is
-distributed (per-partition Arrow batches, codec built once per task),
-so it scales with the cluster; the jar path is simply faster per row.
+The body codec is the pure-Python Avro codec (schema/avro_codec.py),
+the role goavro plays for the reference's producer, applied to pandas
+frames by `encode_frame` / `decode_frame`. Where it runs depends on
+where the bytes are:
+
+- Wire-broker mode (`encode_local` / `decode_local`): the bytes are
+  produced from and fetched to the driver, so the codec runs there,
+  behind one Arrow hop to or from Spark — no Python worker job.
+- JVM Kafka connector and streaming (`encode_confluent_avro` /
+  `decode_confluent_avro`): JVM spark-avro `to_avro`/`from_avro` when
+  the jar is on the classpath, else the same codec distributed over
+  Arrow-batched `mapInPandas` (codec built once per task).
 """
 
 from __future__ import annotations
@@ -74,7 +79,7 @@ def have_avro_jar(spark) -> bool:
     return _AVRO_JAR_STATE[key]
 
 
-def _to_avro_native(v, dtype):
+def _to_avro_native(v):
     """One pandas cell → Avro-native value for the pure-Python codec."""
     import pandas as pd
 
@@ -91,6 +96,76 @@ def _to_avro_native(v, dtype):
     if isinstance(v, bytearray):
         return bytes(v)
     return v
+
+
+def _integral_fields(record_schema: dict) -> set[str]:
+    """Fields whose (non-null) Avro type is int or long. pandas widens
+    such a column to float64 when it holds a null, so the encoder turns
+    the column's floats back into ints."""
+    out = set()
+    for f in record_schema.get("fields", []):
+        t = f["type"]
+        if isinstance(t, list):
+            branches = [b for b in t if b != "null"]
+            t = branches[0] if len(branches) == 1 else None
+        if isinstance(t, dict):
+            t = t.get("type")
+        if t in ("int", "long"):
+            out.add(f["name"])
+    return out
+
+
+def encode_frame(pdf, codec, header: bytes, cols: list[str]) -> list[bytes]:
+    """pandas rows → Confluent-wire frames (header + AvroCodec body)."""
+    ints = _integral_fields(codec.schema)
+    integral = [c in ints for c in cols]
+    out = []
+    for row in pdf[cols].itertuples(index=False, name=None):
+        rec = {}
+        for c, is_int, v in zip(cols, integral, row):
+            v = _to_avro_native(v)
+            rec[c] = int(v) if is_int and isinstance(v, float) else v
+        out.append(header + codec.encode(rec))
+    return out
+
+
+def decode_frame(values, codec, st):
+    """Confluent-wire frames → pandas frame with the columns of `st`
+    (timestamps as datetime64, dates as datetime.date)."""
+    import pandas as pd
+    from pyspark.sql.types import DateType, TimestampType
+
+    names = [f.name for f in st.fields]
+    recs = [codec.decode(v, 5) for v in values]
+    out = pd.DataFrame.from_records(recs, columns=names)
+    for f in st.fields:
+        if isinstance(f.dataType, TimestampType):
+            out[f.name] = pd.to_datetime(out[f.name], unit="us")
+        elif isinstance(f.dataType, DateType):
+            out[f.name] = out[f.name].map(
+                lambda d: _EPOCH + _dt.timedelta(days=int(d))
+                if pd.notna(d)
+                else None
+            )
+    return out
+
+
+def encode_local(
+    df: DataFrame, schema_json: str, schema_id: int, cols: list[str]
+) -> list[bytes]:
+    """Driver-side wire encode: one Arrow `toPandas()`, then the codec."""
+    from pipegen_spark.schema.avro_codec import AvroCodec
+
+    pdf = df.select(*cols).toPandas()
+    return encode_frame(pdf, AvroCodec(schema_json), wire_header(schema_id), cols)
+
+
+def decode_local(spark, values: list[bytes], avro_json: str, st) -> DataFrame:
+    """Driver-side wire decode: the codec, then one Arrow
+    `createDataFrame` of the decoded frame."""
+    from pipegen_spark.schema.avro_codec import AvroCodec
+
+    return spark.createDataFrame(decode_frame(values, AvroCodec(avro_json), st), st)
 
 
 def encode_confluent_avro(
@@ -113,9 +188,8 @@ def encode_confluent_avro(
 def encode_confluent_avro_py(
     df: DataFrame, avro_schema_json: str, schema_id: int, cols: list[str]
 ) -> DataFrame:
-    """Pure-Python wire encode (no jar): header + AvroCodec body."""
+    """Pure-Python wire encode (no jar): encode_frame per Arrow batch."""
     header = wire_header(schema_id)
-    dtypes = dict(df.select(*cols).dtypes)
 
     def _encode(batches):
         import pandas as pd
@@ -124,17 +198,7 @@ def encode_confluent_avro_py(
 
         codec = AvroCodec(avro_schema_json)
         for pdf in batches:
-            values = [
-                header
-                + codec.encode(
-                    {
-                        c: _to_avro_native(v, dtypes[c])
-                        for c, v in zip(cols, row)
-                    }
-                )
-                for row in pdf[cols].itertuples(index=False, name=None)
-            ]
-            yield pd.DataFrame({"value": values})
+            yield pd.DataFrame({"value": encode_frame(pdf, codec, header, cols)})
 
     return df.select(*cols).mapInPandas(_encode, "value binary")
 
@@ -160,31 +224,14 @@ def decode_confluent_avro(df: DataFrame, spec) -> DataFrame:
 
 
 def decode_confluent_avro_py(df: DataFrame, avro_json: str, st) -> DataFrame:
-    """Pure-Python wire decode (no jar): strip header, AvroCodec body."""
-    from pyspark.sql.types import DateType, TimestampType
-
-    names = [f.name for f in st.fields]
-    ts_cols = [f.name for f in st.fields if isinstance(f.dataType, TimestampType)]
-    date_cols = [f.name for f in st.fields if isinstance(f.dataType, DateType)]
+    """Pure-Python wire decode (no jar): decode_frame per Arrow batch."""
 
     def _decode(batches):
-        import pandas as pd
-
         from pipegen_spark.schema.avro_codec import AvroCodec
 
         codec = AvroCodec(avro_json)
         for pdf in batches:
-            recs = [codec.decode(bytes(v)[5:]) for v in pdf["value"]]
-            out = pd.DataFrame.from_records(recs, columns=names)
-            for c in ts_cols:
-                out[c] = pd.to_datetime(out[c], unit="us")
-            for c in date_cols:
-                out[c] = out[c].map(
-                    lambda d: _EPOCH + _dt.timedelta(days=int(d))
-                    if d is not None
-                    else None
-                )
-            yield out
+            yield decode_frame(pdf["value"], codec, st)
 
     return df.select("value").mapInPandas(_decode, st)
 

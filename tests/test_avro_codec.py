@@ -199,3 +199,45 @@ def test_wire_decode_dispatch_uses_py_fallback(spark):
     assert sorted((r.id, r.label) for r in out.collect()) == [
         (i, f"l{i}") for i in range(10)
     ]
+
+def test_wire_local_codec_matches_mapinpandas_path(spark):
+    """encode_local/decode_local (the driver-side wire codec) against
+    the distributed mapInPandas pair, row for row, on a nullable-union
+    schema: null ints (which pandas widens to float64 within a batch),
+    null strings, timestamps and dates. One partition, so the nulls and
+    the values share an Arrow batch on the mapInPandas side too."""
+    import datetime as dt
+
+    from pipegen_spark.schema.avsc import struct_to_avro
+    from pipegen_spark.streaming import wire
+
+    rows = [
+        (1, "a", dt.datetime(2024, 1, 2, 3, 4, 5, 6), dt.date(2024, 2, 29), 2**40),
+        (None, None, None, None, None),
+        (-3, "", dt.datetime(1969, 12, 31, 23, 59, 59), dt.date(1970, 1, 1), -7),
+        (4, None, dt.datetime(2000, 1, 1), None, None),
+    ]
+    df = spark.createDataFrame(
+        rows, "i int, s string, t timestamp, d date, l bigint"
+    ).coalesce(1)
+    avro_json = struct_to_avro(df.schema, "Nullable")
+    assert json.loads(avro_json)["fields"][0]["type"] == ["null", "int"]
+
+    local = wire.encode_local(df, avro_json, 9, df.columns)
+    dist = [
+        bytes(r.value)
+        for r in wire.encode_confluent_avro_py(
+            df, avro_json, 9, df.columns
+        ).collect()
+    ]
+    assert local == dist
+
+    back_local = wire.decode_local(spark, local, avro_json, df.schema)
+    back_dist = wire.decode_confluent_avro_py(
+        spark.createDataFrame([(v,) for v in dist], "value binary"),
+        avro_json,
+        df.schema,
+    )
+    assert back_local.schema == back_dist.schema == df.schema
+    assert back_local.collect() == back_dist.collect()
+    assert [tuple(r) for r in back_local.collect()] == rows

@@ -98,6 +98,35 @@ def test_crc32c_published_vector():
     assert crc32c(b"") == 0
 
 
+def _crc32c_prefixes(data: bytes) -> list[int]:
+    """Reference: the per-byte table CRC32C (table built here from the
+    polynomial), finalised after every prefix of `data`."""
+    table = []
+    for i in range(256):
+        c = i
+        for _ in range(8):
+            c = (c >> 1) ^ 0x82F63B78 if c & 1 else c >> 1
+        table.append(c)
+    crc, out = 0xFFFFFFFF, [0]
+    for b in data:
+        crc = (crc >> 8) ^ table[(crc ^ b) & 0xFF]
+        out.append(crc ^ 0xFFFFFFFF)
+    return out
+
+
+def test_crc32c_blocks_match_per_byte_reference():
+    """Every length 0..4097: tail only, exact 64-byte blocks, blocks
+    plus a tail; then a buffer longer than one numpy chunk of blocks."""
+    import random
+
+    data = random.Random(11).randbytes(4097)
+    want = _crc32c_prefixes(data)
+    for n in range(len(data) + 1):
+        assert crc32c(data[:n]) == want[n], n
+    big = random.Random(12).randbytes(64 * 8192 + 65)
+    assert crc32c(big) == _crc32c_prefixes(big)[-1]
+
+
 def test_record_batch_golden_bytes():
     assert encode_record_batch([(b"k", b"v")]) == GOLDEN_BATCH_KV
     assert decode_record_batches(GOLDEN_BATCH_KV) == [

@@ -37,7 +37,9 @@ from pipegen_spark.sources.kafka_wire import FakeKafkaBroker, KafkaWireClient
 @pytest.fixture
 def mock_registry():
     """Minimal Schema Registry REST mock (ids start at 7 so a constant
-    id 1 anywhere in the producer path would be caught)."""
+    id 1 anywhere in the producer path would be caught). As in the real
+    API, a lookup under a subject matches the schema, not just the
+    subject."""
     state = {"subjects": {}, "by_id": {}, "next_id": 7}
 
     class Handler(BaseHTTPRequestHandler):
@@ -75,10 +77,13 @@ def mock_registry():
                 self._json({"id": sid})
             else:
                 subject = self.path.split("/")[2]
-                if subject in state["subjects"]:
-                    self._json({"id": state["subjects"][subject]})
-                else:
+                sid = state["subjects"].get(subject)
+                if sid is None:
                     self._json({"error_code": 40401}, 404)
+                elif state["by_id"][sid] != payload["schema"]:
+                    self._json({"error_code": 40403}, 404)
+                else:
+                    self._json({"id": sid})
 
     srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
@@ -195,6 +200,27 @@ def test_runner_steps_1_to_14_over_the_socket(
         assert first[0] == 0  # Confluent magic byte
         assert int.from_bytes(first[1:5], "big") == ps["schema_id"]
 
+        # 5-6: the sink stamps the id of the schema it encoded with —
+        # resolving each output header through the registry yields a
+        # schema that decodes every output record, and the records are
+        # the input records (name, amount -> name, total)
+        from pipegen_spark.schema.avro_codec import AvroCodec
+
+        sent = _read_topic(host, port, in_topic)
+        got = _read_topic(host, port, out_topic)
+        in_codec = AvroCodec(reg_state["by_id"][ps["schema_id"]])
+        out_ids = {int.from_bytes(v[1:5], "big") for v in got}
+        assert len(out_ids) == 1
+        out_codec = AvroCodec(reg_state["by_id"][out_ids.pop()])
+        want = sorted(
+            (r["name"], r["amount"])
+            for r in (in_codec.decode(v, 5) for v in sent)
+        )
+        assert sorted(
+            (r["name"], r["total"])
+            for r in (out_codec.decode(v, 5) for v in got)
+        ) == want
+
         # 12 (r13): the consumer ran as a real consumer GROUP — joined,
         # took its assignment, committed offsets as it drained — so the
         # B19 lag monitor, pointed at the same broker AFTER the run,
@@ -216,6 +242,99 @@ def test_runner_steps_1_to_14_over_the_socket(
         html = open(result.report_path).read()
         assert "Pipeline execution report" in html
         assert result.elapsed_seconds > 0
+
+
+def _read_topic(host, port, topic) -> list[bytes]:
+    client = KafkaWireClient(host, port)
+    values, offset = [], 0
+    try:
+        while True:
+            _err, hw, recs = client.fetch_v2(topic, 0, offset)
+            values.extend(bytes(v) for (_o, _t, _k, v, _h) in recs if v)
+            if not recs or recs[-1][0] + 1 >= hw:
+                return values
+            offset = recs[-1][0] + 1
+    finally:
+        client.close()
+
+
+def _unreachable_url() -> str:
+    """An http URL on a localhost port nothing listens on."""
+    import socket
+
+    with socket.socket() as sock:
+        sock.bind(("127.0.0.1", 0))
+        port = sock.getsockname()[1]
+    return f"http://127.0.0.1:{port}"
+
+
+def test_runner_without_registry_over_the_socket(
+    spark, scaffolded_kafka_project, tmp_path
+):
+    """No registry answers: the producer stamps the default id, the
+    wire source decodes with the schema the run produced the input
+    topic with (not the DDL-derived nullable-union guess), and the run
+    passes end to end."""
+    from pipegen_spark.plans.runner import PipelineRunner, RunnerConfig
+
+    with FakeKafkaBroker() as (host, port):
+        cfg = RunnerConfig(
+            project_dir=scaffolded_kafka_project,
+            wire_broker=f"{host}:{port}",
+            message_rate=500,
+            duration_seconds=0.2,
+            variables={"SCHEMA_REGISTRY_URL": _unreachable_url()},
+        )
+        result = PipelineRunner(spark, cfg).run()
+    assert [r["status"] for r in result.statement_results] == ["OK"] * 3
+    cons = result.producer_stats["consumer"]
+    assert cons["stop_reason"] == "expected_count"
+    assert cons["consumed"] == 100
+    v = cons["validation"]
+    assert v["total_rows"] == 100
+    assert v["missing_name"] == 0 and v["missing_total"] == 0
+
+
+def test_wire_stages_run_no_python_udf(
+    spark, scaffolded_kafka_project, mock_registry, monkeypatch
+):
+    """The wire path's Avro codec runs on the driver: the DataFrames the
+    kafka wire source and the consume step hand to Spark carry no
+    Python UDF node in their executed plans."""
+    from pipegen_spark.monitor import validator
+    from pipegen_spark.plans.executor import SQLPipelineExecutor
+    from pipegen_spark.plans.runner import PipelineRunner, RunnerConfig
+
+    seen = {}
+    source = SQLPipelineExecutor._kafka_wire_source
+    validate = validator.validate
+
+    def spy_source(self, spec):
+        seen["source"] = source(self, spec)
+        return seen["source"]
+
+    def spy_validate(df, rules):
+        seen["consume"] = df
+        return validate(df, rules)
+
+    monkeypatch.setattr(SQLPipelineExecutor, "_kafka_wire_source", spy_source)
+    monkeypatch.setattr(validator, "validate", spy_validate)
+    reg_url, _state = mock_registry
+    with FakeKafkaBroker() as (host, port):
+        cfg = RunnerConfig(
+            project_dir=scaffolded_kafka_project,
+            wire_broker=f"{host}:{port}",
+            message_rate=500,
+            duration_seconds=0.2,
+            variables={"SCHEMA_REGISTRY_URL": reg_url},
+        )
+        result = PipelineRunner(spark, cfg).run()
+    assert result.producer_stats["consumer"]["validation"]["total_rows"] == 100
+    assert set(seen) == {"source", "consume"}
+    for name, df in seen.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython"):
+            assert node not in plan, (name, plan)
 
 
 def test_wire_mode_requires_input_schema(spark, tmp_path):
