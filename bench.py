@@ -75,8 +75,8 @@ sys.path.insert(0, REPO)
 # Excluded from the concurrent pool: streaming parity queries — they
 # resize state partitioning via a session conf and run micro-batch
 # machinery (q40 is the BATCH hopping-window query and pools fine). The
-# label-propagation queries pool too: with AQE on, dup_clusters leaves
-# the session conf alone.
+# connected-components queries pool too: dup_clusters sets no session
+# conf.
 SEQUENTIAL_ONLY = ("q39_", "q41_", "q42_", "q60_")
 POOL_THREADS = 8
 TOP_QUERIES = 20  # stdout line carries only the slowest N (size budget)
@@ -676,7 +676,7 @@ def _stream_throughput(spark, target_rps: int, seconds: float) -> dict:
     real deployment makes (state partition count is fixed at stream start
     and should match state size, not batch-query parallelism).
 
-    Round-9 probe hardening (tools/stream_profile.py attribution of the
+    Round-9 probe hardening (attribution of the
     r7→r8 133k→94k artifact drift — contention, not code: identical
     config measured 46.5k median under load vs 109.2k idle this round):
     (a) the rate source runs 8 tasks, not defaultParallelism=32 — 32

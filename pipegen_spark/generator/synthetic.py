@@ -169,7 +169,7 @@ def synthetic_stream(
     state partitions rather than inheriting defaultParallelism: 32
     near-empty generator tasks per micro-batch are pure scheduling
     overhead on a small-state stream (measured 109k -> 133k rows/s
-    median at 8, tools/stream_profile.py)."""
+    median at 8)."""
     reader = (
         spark.readStream.format("rate")
         .option("rowsPerSecond", rows_per_second)

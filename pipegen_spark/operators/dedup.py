@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pipegen_spark.functions import dialect as dl
+from pipegen_spark.operators.graph import cc_star_labels
 
 # --- minhash configuration (shared with the oracle) -------------------------
 N_PERMS = 16
@@ -372,107 +373,19 @@ def dup_clusters(
     nodes: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iters: int = 20,
-    check_every: int = 2,
+    max_rounds: int = 12,
 ) -> DataFrame:
     """Group near-duplicate PAIRS into clusters: every node gets
     cluster_id = min node id of its connected component (singletons map to
     themselves), plus the component size.
 
-    Distributed min-label propagation, with two cost cuts over the naive
-    loop (measured 9.4s → ~4s at sf0.1):
-    - Iterate ONLY over nodes that touch an edge. Near-dup pair sets are
-      sparse relative to the corpus (that is why dedup works), so the
-      propagation frame is |V(pairs)| rows, not |corpus|; the full node
-      set joins back in once at the end (singletons label themselves).
-    - Materialize each round (localCheckpoint truncates lineage; at
-      cluster scale use durable checkpoint() instead) but run the
-      scalar convergence count only every `check_every` rounds — the
-      count is an extra job per round and propagation converges in
-      component-diameter rounds anyway (shallow by construction).
-    The loop moves nothing to the driver beyond that scalar; the
-    per-round plan is pure joins/aggregates.
+    The component labels come from alternating large-star/small-star
+    contraction over the edge set only (operators/graph.cc_star_labels):
+    O(log n) rounds on any topology, and a RuntimeError rather than
+    unconverged labels when `max_rounds` is not enough. The full node set
+    joins back in once at the end.
     """
-    # Materialize the edge set ONCE: `pairs` is usually the tail of an
-    # expensive pipeline (LSH banding + verification), and without the
-    # checkpoint every propagation round would re-execute that whole
-    # upstream plan inside its join (measured: the dominant cost).
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").cast("long").alias("lbl"))
-    )
-    # Size the LOOP's shuffles to the edge set, not the corpus: each round
-    # is two shuffles over |V(pairs)| rows, and near-dup edge sets are tiny
-    # relative to the corpus, so rounds at batch parallelism are
-    # task-overhead-dominated. With AQE enabled its partition coalescing
-    # already does exactly this per-stage (measured equal-or-faster than
-    # the manual resize on the sf0.1 corpus), so the session conf is left
-    # ALONE — important for callers running queries concurrently, where a
-    # session-global mutation would re-plan unrelated queries. Only when
-    # AQE is off does the loop fall back to the explicit resize (restored
-    # after; never exceeds the session setting, so a 100 TB deployment's
-    # conf still bounds a 1e9-edge loop). The corpus-wide label/size join
-    # below always runs at full parallelism.
-    spark = nodes.sparkSession
-    sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    aqe_on = (
-        spark.conf.get("spark.sql.adaptive.enabled", "false").lower()
-        == "true"
-    )
-    if not aqe_on:
-        loop_parts = max(1, min(sess_parts, -(-edges.count() // 500_000)))
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        for it in range(max_iters):
-            prop = (
-                edges.join(labels, edges["src"] == labels["id"])
-                .groupBy("dst")
-                .agg(F.min("lbl").alias("nlbl"))
-            )
-            merged = (
-                labels.join(prop, labels["id"] == prop["dst"], "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
-                    ).alias("lbl"),
-                    (F.col("nlbl") < F.col("lbl")).alias("_chg"),
-                )
-            )
-            # Checkpoint + convergence-count only every `check_every`
-            # rounds: each is an extra job, and lineage across two
-            # rounds of tiny joins is harmless. r13 (guide §1.2 "fewer
-            # passes"): the checkpoint is LAZY and the convergence count
-            # is the materializing action, so checkpoint+count cost ONE
-            # job per check instead of two (A/B: the eager variant paid
-            # a full extra scheduling round-trip per check for identical
-            # blocks).
-            if (it + 1) % check_every == 0 or it == max_iters - 1:
-                merged = merged.localCheckpoint(eager=False)
-                labels = merged.drop("_chg")
-                if merged.filter(F.col("_chg")).count() == 0:
-                    break
-            else:
-                labels = merged.drop("_chg")
-        # The loop always exits through a check round (`it == max_iters-1`
-        # forces one), so `labels` is already a projection over a
-        # materialized checkpoint — re-checkpointing it here was a pure
-        # duplicate job (r13 cut). The conf-restore path below still sees
-        # only checkpointed plans.
-    finally:
-        if not aqe_on:
-            spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
+    labels = cc_star_labels(pairs, "doc_a", "doc_b", max_rounds)
     return _finish_clusters(nodes, labels, id_col)
 
 
@@ -503,24 +416,6 @@ def _finish_clusters(
         F.col("lbl").alias("cluster_id"),
         F.count("*").over(wsz).cast("long").alias("cluster_size"),
     )
-
-
-def dup_clusters_star(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_rounds: int = 12,
-) -> DataFrame:
-    """dup_clusters' exact output contract (doc → component-min cluster_id
-    + component size) computed with alternating large-star/small-star
-    contraction instead of min-label propagation: O(log n) rounds on any
-    topology vs O(component diameter) — the scale path when duplicate
-    chains can be long (see operators/graph.cc_star_labels for the round
-    mechanics and the 100 TB argument)."""
-    from pipegen_spark.operators.graph import cc_star_labels
-
-    labels = cc_star_labels(pairs, "doc_a", "doc_b", max_rounds=max_rounds)
-    return _finish_clusters(nodes, labels, id_col)
 
 
 def keep_best(

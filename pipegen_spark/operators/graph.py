@@ -1,11 +1,12 @@
-"""Graph operators over edge sets: fixed-iteration PageRank and
-alternating-star connected components.
+"""Graph operators over edge sets: fixed-iteration PageRank,
+alternating-star connected components (the one CC kernel; near-dup
+clustering in operators/dedup.py dup_clusters runs on it), triangle
+counts and label-propagation community detection.
 
-Together with connected components (operators/dedup.py dup_clusters,
-min-label propagation) and Lloyd's k-means (operators/embeddings.py),
-this rounds out the iterative-algorithm family: each iteration is a
-plain join + aggregate over the EDGE set, unrolled a fixed number of
-times so the whole computation stays declarative and oracle-checkable.
+Together with Lloyd's k-means (operators/embeddings.py) this is the
+iterative-algorithm family: each iteration is a plain join + aggregate
+over the EDGE set, unrolled or bounded in rounds so the whole
+computation stays declarative and oracle-checkable.
 
 Scale design (100 TB discipline):
 - Per iteration: ONE shuffle keyed on the destination node for the
@@ -30,15 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pipegen_spark.functions import dialect as dl
-
-# Spill-to-parquet lineage cut (r11; promoted to operators/spill.py in
-# r13 so pipeline compositions share it — see that module for the
-# TMPDIR/reaping bounds and the localCheckpoint-OOM rationale).
 from pipegen_spark.operators.spill import spill_to_parquet
-
-
-def _spill_to_parquet(df: DataFrame) -> DataFrame:
-    return spill_to_parquet(df, label="graph")
 
 PR_SCALE = 10**12  # total rank mass in integer units
 PR_DAMP_NUM = 85  # damping factor 0.85 as a rational
@@ -58,7 +51,7 @@ def pagerank_fixed(
     (id, rank_micro) for every node, rank in PR_SCALE integer units.
     """
     src, dst = F.col(src_col), F.col(dst_col)
-    # Materialize the edge set ONCE (same discipline as dup_clusters):
+    # Materialize the edge set ONCE (same discipline as cc_star_labels):
     # `edges` is often the tail of an expensive pipeline (here a distinct
     # over the fact scan), and it feeds nodes, out-degrees AND every
     # iteration's contribution join — without a cut each unrolled round
@@ -79,7 +72,7 @@ def pagerank_fixed(
     # footprint at any scale — and it is literally the durable
     # checkpoint() shape a real cluster deployment uses, just on
     # local disk.
-    edges = _spill_to_parquet(edges.select(src, dst))
+    edges = spill_to_parquet(edges.select(src, dst), label="graph")
     nodes = (
         edges.select(src.alias("id"))
         .unionByName(edges.select(dst.alias("id")))
@@ -124,7 +117,7 @@ def pagerank_fixed(
             # a measured A/B showed per-round eager checkpoints cost more
             # in extra jobs than they save (4.1 s -> 5.1 s warm at
             # sf0.1). For many more iterations (or big rank frames),
-            # checkpoint every K rounds like dup_clusters.
+            # checkpoint every K rounds.
         )
     return ranks.select("id", F.col("r").alias("rank_micro"))
 
@@ -143,13 +136,12 @@ def cc_star_labels(
     Components in MapReduce and Beyond", SoCC'14). Returns (id, lbl) for
     every node that touches an edge, lbl = component minimum as LONG.
 
-    Why a second CC algorithm next to dup_clusters' min-label
-    propagation: propagation needs O(component diameter) rounds — fine
-    for near-dup clusters (shallow by construction), but a chain-shaped
-    component of length L costs L rounds. Star contraction HALVES tree
-    heights every large+small round, so it converges in O(log n) rounds
-    on ANY topology — the shape you want when the edge set at 100 TB is
-    not guaranteed shallow (link graphs, cross-corpus duplicate chains).
+    Why star contraction rather than min-label propagation: propagation
+    needs O(component diameter) rounds, so a chain-shaped component of
+    length L costs L rounds. Star contraction HALVES tree heights every
+    large+small round, so it converges in O(log n) rounds on ANY
+    topology — the shape you want when the edge set at 100 TB is not
+    guaranteed shallow (link graphs, cross-corpus duplicate chains).
 
     Per round this is two groupBy-min + join passes over the EDGE set:
     - large-star: over the symmetric neighbor list, attach every
@@ -243,17 +235,17 @@ def cc_star_labels(
     else:
         # Exhausting max_rounds without converging would return
         # intermediate tree parents, not component minimums — silently
-        # breaking the "same oracle bit-for-bit" contract with the
-        # propagation labels on adversarial topologies. Star contraction
-        # halves tree heights per round, so 12 rounds covers ~2^12-deep
-        # trees; anything deeper must fail loudly, not approximately.
+        # breaking the component-min contract on adversarial
+        # topologies. Star contraction halves tree heights per round, so
+        # 12 rounds covers ~2^12-deep trees; anything deeper must fail
+        # loudly, not approximately.
         raise RuntimeError(
             f"cc_star_labels did not converge in {max_rounds} rounds "
             f"({non_star} non-star edges remain); raise max_rounds"
         )
     # Star edges ARE the labeling: child → component min; centers label
-    # themselves via the caller's coalesce (same contract as
-    # dup_clusters' propagation labels).
+    # themselves (and dedup._finish_clusters' coalesce labels the nodes
+    # off the edge set).
     roots = e.select(F.col("p").alias("id"), F.col("p").alias("lbl")).distinct()
     return e.select(F.col("c").alias("id"), F.col("p").alias("lbl")).unionByName(
         roots

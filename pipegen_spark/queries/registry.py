@@ -8,123 +8,8 @@ Enumeration order is part of the contract: the driver's correctness gate
 hashes the FIRST 50 entries in dict order, so `all_queries()` front-loads
 `GATE_WINDOW` — the 50 queries that most need a hard driver signal this
 round — and every other query enumerates behind it (every query in the
-corpus remains verifiable locally via tools/compare.py).
-
-Rotation history (the plan: every query accumulates a driver row across
-rounds; long-stable canaries stay in every window):
-
-- r1-r3 window: the relational corpus head (q01...)
-- r4 window: 34 training ops + q48-q57 + 6 canaries — found the 6
-  output-surface reds fixed this round
-- r5 window: the 37 training ops deferred in r4, the 6 repaired r4
-  reds (re-gated to confirm the fix), the 6 canaries, and q75 — came
-  back 50/50 green
-- r6 window: the 19 never-gated queries (q58-q74 tranche +
-  curate_classifier + curate_rep_ngram), the two real-codec queries
-  (then rows-only), seven new oracle-checked ops, the 6 canaries, and
-  the first 16 (alphabetically) of the 38 r4-green ops — came back
-  48/50 hash-green + 2 rows-only; first-pass driver coverage of the
-  whole corpus complete.
-- r7 window: the remaining 22 r4-green ops (embed_kmeans +
-  multimodal_binary_stats + q49-q52/q55/q56 + simsearch_* + text_*
-  tail), the two codec queries RE-gated (their surface changed to the
-  md5-derived hard-oracle form — now hash rows, not rows-only), the
-  brand-new curate_quality_threshold and multimodal_jpeg_roundtrip,
-  the 18 lowest-numbered r3-green relational rows (the whole r1-r3
-  tranche's newest rows date from r3), and the 6 canaries. After this
-  window every query's newest driver row is <= 3 rounds old.
-- r8 window: the remaining 26 r3-green relational rows (q18-q46 minus
-  canaries), the three changed/new surfaces
-  (curate_ensemble_threshold — brand-new gated 100 TB-shape ensemble;
-  curate_unimax, whose budget multiply went overflow-split and whose
-  epochs_ppm gained the zero-token guard in BOTH engines; and the
-  brand-new multimodal_frame_sample and dedup_semantic_auto), the 14
-  alphabetically-first r5-green ops, and the 6 canaries. Came back
-  50/50 green; after this window no driver row anywhere predated r4.
-- r9 window: retires the whole never-gated set — the 31
-  round-8 late-tranche queries that had no driver row (q76-q80,
-  curate_blocklist/boilerplate/calibration/doremi/length_stats/
-  preference_pairs/split_leakage, dedup_tfidf_cosine/threshold_sweep/
-  triangles, embed_cluster_sample/jl_project/top_direction,
-  multimodal_audio_fp/jpeg_420/patches/resample/vad_segments/
-  wav_energy, simsearch_ivfpq, text_bpe_encode/bpe_train/chardiv/
-  rake/textrank/vocab_growth) — plus the 7 changed/new surfaces
-  (dedup_semantic re-pointed at the scale-safe auto-k plan, retiring
-  the redundant dedup_semantic_auto key; simsearch_knn_graph /
-  embed_hard_negatives / simsearch_bitext with the size-derived LSH
-  plane count; embed_normalize / embed_quantize whose gate surface
-  went to per-vector md5 folds late in r8; and the brand-new
-  multimodal_mjpeg_frames — real MJPEG/AVI container decode over the
-  from-scratch JPEG codec), 6 rolling r5 re-gates (dedup_incremental,
-  dedup_setjoin, dedup_substring, embed_gram, embed_matryoshka,
-  embed_pq), and the 6 canaries. After this window EVERY query in the
-  corpus has at least one driver row.
-- r10 window: the 6 round-9 late additions that landed
-  after the r9 window was cut and have never had a driver row
-  (dedup_lpa, text_perplexity, text_entropy, curate_kl_drift,
-  dedup_semantic_ivf, q81_basket_pairs — the whole of the r9
-  hard-signal debt), the 5 changed/new surfaces
-  (curate_quality_percentile + curate_ensemble re-pointed at the
-  bounded-histogram threshold-gate production plan, retiring the
-  redundant *_threshold keys; the brand-new
-  dedup_semantic_ivf_trained — SemDeDup IVF on a Lloyd-trained
-  quantizer — and curate_domain_stats / curate_domain_blocklist,
-  the domain-level curation family), the 22 r5-green rolling
-  re-gates (multimodal_features, multimodal_phash, q48/q53/q54/
-  q57/q75, simsearch_hybrid/mmr/pq/pq_recall, text_bpe_pairs/
-  burstiness/cms_topk/diversity/good_turing/kneser_ney/lm_bigram/
-  pmi/rarity/readability/typo_pairs), the 11 alphabetically-first
-  r6-green ops (curate_chunk ... dedup_clusters), and the 6
-  canaries = 50. Came back 50/50 hash-green.
-- r11 window: the two brand-new surfaces
-  (multimodal_gif_features — the GIF hard-oracle codec query — and
-  q83_stream_full_outer_join — the FULL OUTER stream-stream join)
-  and q82_stream_outer_join at the front — the latter the sole
-  GATE_PENDING entry, the only corpus query with no driver row
-  anywhere (r10 VERDICT next #1) — then the rolling rotation: the
-  28 remaining r6-green ops, now the corpus's oldest rows
-  (dedup_exact/prefix/minhash_lsh/simhash/ngram_jaccard/
-  embedding_cosine/keep_best/span_stats, embed_dim_stats/outliers,
-  q58-q74 ex-q60-gap, simsearch_range), the 13 alphabetically-first
-  r7-green ops (embed_kmeans ... q08_window_rownum), and the 6
-  canaries = 50. After this window every query in the corpus has a
-  driver row and no row predates r7. Queries landing after this
-  round's final suite run go in GATE_PENDING (mechanical snapshot
-  rule) and must ride the front of the r12 window.
-- r12 window: the five brand-new surfaces
-  (multimodal_flac_features — the from-scratch FLAC codec under the
-  WAV-shaped md5 hard oracle; multimodal_gif_frames — animated GIF
-  compositing with GCE transparency/disposal under a running-MAX
-  frame oracle; curate_pii_stats — regex PII detectors + the Luhn
-  checkfilter + redaction; dedup_url_canonical — RFC 3986 §6 URL
-  normalization dedup; text_warc_extract — ISO 28500 WARC crawl
-  ingestion), then the rolling rotation: the 30 r7-dated
-  rows (the corpus's oldest after the r11 window: q09/q10_*/q11-q17
-  tail, q49-q52/q55/q56, simsearch_bruteforce/ivf/lsh/recall, the
-  text_* tail), the 9 alphabetically-first r8-dated rows
-  (curate_budget ... curate_temperature — curate_unimax,
-  curate_weighted_sample and dedup_bloom dropped to r13 when the
-  mid-round surfaces took their slots), and the 6 canaries = 50.
-  After this window no corpus query's newest driver row predates r8
-  except those three r13 rotation picks.
-- r13 window (current): the three brand-new surfaces at the front —
-  curate_pipeline_e2e (the whole curation stack composed as ONE
-  pipeline: WARC ingest -> langid -> PII redaction -> Gopher ∧
-  classifier ∧ percentile ensemble -> MinHash keep-best dedup ->
-  90/5/5 split, r12 VERDICT task 4) and the mid-round
-  text_hll_distinct (from-scratch deterministic HyperLogLog under
-  the hard value gate) + text_stupid_backoff (web-scale LM filter
-  scored under reference-slice counts) — then the rolling rotation:
-  ALL 33 r8-dated
-  rows (curate_unimax / curate_weighted_sample / dedup_bloom — the
-  r12 rotation picks — plus dedup_cc_star, dedup_containment,
-  multimodal_frame_sample, multimodal_jpeg_progressive and the
-  q18-q46 relational tranche), the 8 alphabetically-first r9-dated
-  rows (curate_blocklist ... dedup_incremental — dedup_semantic and
-  dedup_setjoin dropped to r14 when the mid-round HLL and
-  stupid-backoff surfaces took their slots), and the 6 canaries =
-  50. After this window no corpus query's newest driver row predates
-  r9 except those two r14 rotation picks.
+corpus remains verifiable locally via tools/compare.py). Which rounds
+gated which queries is recorded in GATE_STATUS.json.
 """
 
 from __future__ import annotations

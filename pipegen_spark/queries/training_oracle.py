@@ -4234,9 +4234,7 @@ TRAINING_ORACLE: dict[str, str] = {
     """,
     "dedup_minhash_lsh": _minhash_sql(),
     "dedup_clusters": _clusters_sql(),
-    # Same SQL by design: star contraction and min-label propagation are
-    # two distributed algorithms for the SAME function (component-min
-    # labels); a single oracle checks they agree bit-for-bit.
+    # dedup_cc_star is the same query as dedup_clusters (gate-window key).
     "dedup_cc_star": _clusters_sql(),
     "dedup_lpa": _lpa_sql(),
     "dedup_keep_best": _keep_best_sql(),

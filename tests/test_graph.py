@@ -54,7 +54,7 @@ def _star_clusters(spark, n_nodes, pair_list, **kw):
     pairs = spark.createDataFrame(pair_list, "doc_a long, doc_b long")
     return {
         r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-        for r in dd.dup_clusters_star(nodes, pairs, "doc_id", **kw).collect()
+        for r in dd.dup_clusters(nodes, pairs, "doc_id", **kw).collect()
     }
 
 
@@ -75,23 +75,6 @@ def test_cc_star_long_chain_logarithmic_rounds(spark):
     assert all(out[i] == (0, n) for i in range(n))
 
 
-def test_cc_star_agrees_with_propagation(spark):
-    # The two CC algorithms compute the same function — compare them on a
-    # graph mixing a chain, a triangle, reversed pairs, and singletons.
-    from pipegen_spark.operators import dedup as dd
-
-    pair_list = [(9, 8), (8, 7), (1, 2), (2, 3), (3, 1), (12, 11)]
-    nodes = spark.createDataFrame([(i,) for i in range(14)], ["doc_id"])
-    pairs = spark.createDataFrame(pair_list, "doc_a long, doc_b long")
-    star = {
-        tuple(r) for r in dd.dup_clusters_star(nodes, pairs, "doc_id").collect()
-    }
-    prop = {
-        tuple(r) for r in dd.dup_clusters(nodes, pairs, "doc_id").collect()
-    }
-    assert star == prop
-
-
 def test_cc_star_empty_pairs_all_singletons(spark):
     out = _star_clusters(spark, 3, [])
     assert out == {0: (0, 1), 1: (1, 1), 2: (2, 1)}
@@ -103,16 +86,20 @@ def test_cc_star_self_loop_and_duplicate_pairs(spark):
 
 
 def test_cc_star_random_graphs_match_union_find(spark):
-    # Seeded random graphs vs a Python union-find ground truth: star
-    # contraction must produce the component-min labeling exactly.
+    # Seeded random graphs, plus a fixed graph mixing a chain, a triangle,
+    # reversed pairs and singletons, vs a Python union-find ground truth:
+    # star contraction must produce the component-min labeling exactly.
     import random
 
+    graphs = []
     for seed in (7, 21, 99):
         rng = random.Random(seed)
-        n = 30
-        edges = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(25)
-        ]
+        edges = [(rng.randrange(30), rng.randrange(30)) for _ in range(25)]
+        graphs.append((seed, 30, edges))
+    graphs.append(
+        ("mixed", 14, [(9, 8), (8, 7), (1, 2), (2, 3), (3, 1), (12, 11)])
+    )
+    for name, n, edges in graphs:
         parent = list(range(n))
 
         def find(x):
@@ -132,15 +119,7 @@ def test_cc_star_random_graphs_match_union_find(spark):
             sizes[v] = sizes.get(v, 0) + 1
         expect = {i: (lbl[i], sizes[lbl[i]]) for i in range(n)}
 
-        from pipegen_spark.operators import dedup as dd
-
-        nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
-        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = {
-            r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-            for r in dd.dup_clusters_star(nodes, pairs, "doc_id").collect()
-        }
-        assert got == expect, f"seed {seed}"
+        assert _star_clusters(spark, n, edges) == expect, f"graph {name}"
 
 
 def test_cc_star_rejects_nonpositive_max_rounds(spark):

@@ -242,8 +242,9 @@ def test_dup_clusters_transitive_and_singletons(spark):
 
 
 def test_dup_clusters_long_chain_converges(spark):
-    # a path graph needs diameter rounds; 12 nodes exercises the loop
-    n = 12
+    # A 60-node path has diameter 59: a diameter-bounded kernel capped
+    # below that returns unconverged labels, star contraction does not.
+    n = 60
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"]
