@@ -1,17 +1,15 @@
-"""Brokerless produce/consume NETWORK-path smoke (round-10, r9 VERDICT
-task 8): the docker-gated e2e (`test_kafka_e2e.py`) skips in this
-sandbox, so these tests execute the Kafka wire protocol over a REAL
-localhost TCP socket against the in-process v0 broker — request
-framing, MessageSet v0 encode/decode with CRC validation, produce
-offset assignment, fetch replay, metadata, and the Confluent-wire Avro
-payload bytes the Spark operators move (A1/A2's value format) surviving
-the socket roundtrip byte-for-byte.
+"""Brokerless produce/consume NETWORK-path tests: the docker-gated e2e
+(`test_kafka_e2e.py`) skips where no docker daemon exists, so these
+tests execute the Kafka wire protocol over a REAL localhost TCP socket
+against the in-process broker — request framing, magic-2 RecordBatch
+encode/decode with CRC32C validation under every codec, produce offset
+assignment, fetch replay, metadata, the group/offset APIs, and the
+Confluent-wire Avro payload bytes the Spark operators move (A1/A2's
+value format) surviving the socket roundtrip byte-for-byte.
 
-The golden-bytes test pins the MessageSet layout to a hex literal
-hand-assembled from the published protocol guide (offset:int64,
-size:int32, crc:int32 over magic..value, magic=0, attributes=0,
-key/value as int32-length bytes), so client and broker sharing the
-module's encoders cannot make the roundtrip circular.
+Golden bytes are hand-assembled from the published protocol guide and
+the codec format specs, so client and broker sharing the module's
+encoders cannot make the roundtrips circular.
 """
 
 from __future__ import annotations
@@ -30,36 +28,9 @@ from pipegen_spark.sources.kafka_wire import (
     FakeKafkaBroker,
     KafkaWireClient,
     crc32c,
-    decode_message_set,
     decode_record_batches,
-    encode_message_set,
     encode_record_batch,
 )
-
-# MessageSet v0 for [(b"k", b"v")] at offset 0, assembled by hand from
-# the protocol guide (crc32 of 00 00 | 00000001 6b | 00000001 76).
-GOLDEN_KV = bytes.fromhex(
-    "0000000000000000000000101fecd70a0000000000016b0000000176"
-)
-
-
-def test_message_set_golden_bytes():
-    assert encode_message_set([(b"k", b"v")]) == GOLDEN_KV
-    assert decode_message_set(GOLDEN_KV) == [(0, b"k", b"v")]
-
-
-def test_message_set_null_key_and_crc_check():
-    mset = encode_message_set([(None, b"payload")])
-    assert decode_message_set(mset) == [(0, None, b"payload")]
-    # corrupt one value byte -> CRC must catch it loudly
-    bad = bytearray(mset)
-    bad[-1] ^= 0xFF
-    with pytest.raises(ValueError, match="CRC"):
-        decode_message_set(bytes(bad))
-    # a partial trailing message (legal in fetch responses) is dropped
-    two = encode_message_set([(b"a", b"1"), (b"b", b"2")])
-    assert len(decode_message_set(two[:-3])) == 1
-
 
 # --- RecordBatch v2 (magic 2) -------------------------------------------------
 
@@ -159,11 +130,9 @@ def test_record_batch_timestamps_headers_nulls():
 
 def test_record_batch_gzip_compression():
     """Real brokers usually serve COMPRESSED batches (attributes bits
-    0-2). gzip (codec 1) roundtrips through the pure-stdlib path; as
-    of r12 snappy/lz4/zstd roundtrip too (their own suites), so the
-    remaining loud boundary is the protocol's RESERVED codec values
-    (5-7), which must raise instead of handing the varint reader
-    compressed bytes."""
+    0-2). gzip (codec 1) roundtrips through zlib; the loud boundary is
+    the protocol's RESERVED codec values (5-7), which must raise
+    instead of handing the varint reader compressed bytes."""
     from pipegen_spark.sources.kafka_wire import COMPRESSION_GZIP
 
     recs = [
@@ -225,9 +194,9 @@ def test_produce_fetch_v2_gzip_over_socket():
 
 @pytest.mark.parametrize("codec", [2, 3, 4])  # snappy / lz4 / zstd
 def test_produce_fetch_v2_all_codecs_over_socket(codec):
-    """r12: every from-scratch codec carries batches over the REAL
-    socket path — producer compresses, broker stores the batch bytes,
-    consumer decompresses on fetch."""
+    """Every library codec carries batches over the REAL socket path —
+    producer compresses, broker stores the records, consumer
+    decompresses on fetch."""
     recs_in = [
         (b"k%d" % i, b"payload %d " % i * 20, 100 + i, (("h", b"x"),))
         for i in range(10)
@@ -247,6 +216,239 @@ def test_produce_fetch_v2_all_codecs_over_socket(codec):
             ]
         finally:
             c.close()
+    # the repetitive values actually shrink under the codec
+    plain = encode_record_batch(recs_in, base_timestamp=100)
+    packed = encode_record_batch(recs_in, base_timestamp=100, compression=codec)
+    assert len(packed) < len(plain)
+
+
+# --- codec sections: goldens hand-assembled from the format specs ---------------
+
+# zstd (RFC 8878): magic, frame header descriptor, then blocks whose
+# 3-byte little-endian header is size << 3 | type << 1 | last
+# (type 0 raw, 1 RLE, 2 compressed).
+_ZSTD_MAGIC = struct.pack("<I", 0xFD2FB528)
+_SKIPPABLE = struct.pack("<II", 0x184D2A50, 3) + b"xyz"
+
+
+def _zstd_block(kind: int, size: int, payload: bytes, last: int) -> bytes:
+    return (size << 3 | kind << 1 | last).to_bytes(3, "little") + payload
+
+
+# lz4 frame format: magic, FLG, BD, header checksum (second byte of
+# xxh32 over FLG+BD), data blocks (size | 0x80000000 when stored
+# uncompressed), EndMark 0. FLG 0x60 = version 01 + block independence;
+# its checksum byte for BD 0x40 (64 KiB blocks) is 0x82.
+_LZ4_MAGIC = struct.pack("<I", 0x184D2204)
+_LZ4_LONG_LITERAL = bytes(i % 251 for i in range(273))
+
+
+def _lz4_frame(*blocks: tuple[bytes, bool]) -> bytes:
+    out = _LZ4_MAGIC + b"\x60\x40\x82"
+    for block, stored in blocks:
+        out += struct.pack("<I", len(block) | (stored << 31)) + block
+    return out + b"\x00\x00\x00\x00"
+
+
+# snappy raw blocks (format_description.txt): uncompressed length as a
+# uvarint, then elements whose tag's low 2 bits are 00 literal,
+# 01 copy with 1-byte offset, 10 copy with 2-byte offset.
+_SNAPPY_LONG_LITERAL = bytes(i % 251 for i in range(300))
+_SNAPPY_GOLDENS = {
+    # literal "abc de", then copy len 5 at 2-byte offset 6
+    "literal-copy": (
+        b"\x0b" + bytes([5 << 2]) + b"abc de" + bytes([4 << 2 | 2])
+        + b"\x06\x00",
+        b"abc deabc d",
+    ),
+    # literal "wxyz", then copy len 4 at 1-byte offset 4
+    "one-byte-offset-copy": (
+        b"\x08" + bytes([3 << 2]) + b"wxyz" + bytes([0 << 2 | 1, 4]),
+        b"wxyzwxyz",
+    ),
+    # copy len 6 at offset 1 overlaps its own output
+    "overlapping-rle": (
+        b"\x07" + bytes([0 << 2]) + b"a" + bytes([5 << 2 | 2]) + b"\x01\x00",
+        b"aaaaaaa",
+    ),
+    # length 300 = uvarint ac 02; literal tag 61 escapes to a 2-byte
+    # little-endian length-1
+    "long-literal": (
+        b"\xac\x02" + bytes([61 << 2]) + struct.pack("<H", 299)
+        + _SNAPPY_LONG_LITERAL,
+        _SNAPPY_LONG_LITERAL,
+    ),
+}
+
+
+def _xerial(*blocks: bytes) -> bytes:
+    out = b"\x82SNAPPY\x00" + struct.pack(">ii", 1, 1)
+    for block in blocks:
+        out += struct.pack(">i", len(block)) + block
+    return out
+
+
+_GOLDEN_SECTIONS = [
+    pytest.param(
+        4,
+        _ZSTD_MAGIC + b"\x20\x09"  # single segment, 1-byte content size 9
+        + _zstd_block(0, 4, b"abcd", 0) + _zstd_block(1, 5, b"z", 1),
+        b"abcdzzzzz",
+        id="zstd-raw-and-rle-blocks",
+    ),
+    pytest.param(
+        4,
+        # compressed block: RLE literals section (type 1, size 6), "q",
+        # then zero sequences
+        _ZSTD_MAGIC + b"\x20\x06"
+        + _zstd_block(2, 3, bytes([6 << 3 | 1]) + b"q" + b"\x00", 1),
+        b"qqqqqq",
+        id="zstd-rle-literals",
+    ),
+    pytest.param(
+        4,
+        _ZSTD_MAGIC + b"\x20\x06" + _zstd_block(0, 6, b"hello ", 1)
+        + _SKIPPABLE
+        + _ZSTD_MAGIC + b"\x20\x05" + _zstd_block(0, 5, b"world", 1),
+        b"hello world",
+        id="zstd-skippable-and-concatenated",
+    ),
+    pytest.param(
+        4,
+        # descriptor 0x00: no content size; window descriptor 0x00 (1 KiB)
+        _ZSTD_MAGIC + b"\x00\x00" + _zstd_block(0, 5, b"hello", 1),
+        b"hello",
+        id="zstd-no-content-size",
+    ),
+    pytest.param(
+        3,
+        # FLG 0x64 adds the content checksum: xxh32(b"") = 0x02CC5D05,
+        # the xxHash spec's empty-input vector; header checksum 0xA7
+        _LZ4_MAGIC + b"\x64\x40\xa7" + b"\x00\x00\x00\x00"
+        + struct.pack("<I", 0x02CC5D05),
+        b"",
+        id="lz4-golden-header",
+    ),
+    pytest.param(
+        3,
+        _lz4_frame((b"hello ", True)) + _SKIPPABLE
+        + _lz4_frame((b"world", True)),
+        b"hello world",
+        id="lz4-skippable-and-concatenated",
+    ),
+    pytest.param(
+        3,
+        # token 0x54: 5 literals, match 4+4 at offset 5; then a
+        # literals-only tail (lz4_Block_format.md)
+        _lz4_frame((b"\x54abcde\x05\x00\x50fghij", False)),
+        b"abcdeabcdeabcfghij",
+        id="lz4-compressed-block",
+    ),
+    pytest.param(
+        3,
+        # token 0x1f: 1 literal, match 4+15+1 at offset 1 overlaps its
+        # own output; the block ends in 5 literals as the spec requires
+        _lz4_frame((b"\x1fa\x01\x00\x01\x50bcdef", False)),
+        b"a" * 21 + b"bcdef",
+        id="lz4-overlapping-rle",
+    ),
+    pytest.param(
+        3,
+        # 255-extension chains: literal length 15+255+3 = 273, match
+        # length 4+15+255+2 = 276 at offset 257, then 5 literals
+        _lz4_frame((
+            b"\xff\xff\x03" + _LZ4_LONG_LITERAL + b"\x01\x01\xff\x02"
+            + b"\x50fghij",
+            False,
+        )),
+        # the overlapping copy repeats the 257 bytes before it
+        _LZ4_LONG_LITERAL + (_LZ4_LONG_LITERAL[16:] * 2)[:276] + b"fghij",
+        id="lz4-extended-lengths",
+    ),
+    *(
+        pytest.param(2, section, out, id=f"snappy-{name}-{framing}")
+        for name, (block, out) in _SNAPPY_GOLDENS.items()
+        for framing, section in (("raw", block), ("xerial", _xerial(block)))
+    ),
+    pytest.param(
+        2,
+        _xerial(
+            _SNAPPY_GOLDENS["literal-copy"][0],
+            _SNAPPY_GOLDENS["overlapping-rle"][0],
+        ),
+        b"abc deabc daaaaaaa",
+        id="snappy-xerial-two-chunks",
+    ),
+]
+
+
+@pytest.mark.parametrize("codec,section,expected", _GOLDEN_SECTIONS)
+def test_spec_golden_sections_decode(codec, section, expected):
+    from pipegen_spark.sources.kafka_wire import _decompress
+
+    assert _decompress(codec, section) == expected
+
+
+@pytest.mark.parametrize(
+    "codec,section",
+    [
+        (2, b"\x05" + bytes([4 << 2]) + b"ab"),  # literal past block end
+        (2, b"\x05\x00a\x01\x00"),  # zero copy offset
+        (2, b"\x80\x80\x80\x80\x80\x01"),  # length uvarint over 5 bytes
+        (2, _xerial(b"\x0b\x14abc") + b"\x00\x00"),  # short chunk length
+        (3, b"\x00\x00\x00\x00rest"),  # bad frame magic
+        (3, _lz4_frame((b"hello", True))[:-3]),  # truncated frame
+        (4, b"\x00\x00\x00\x00rest"),  # bad frame magic
+        (4, _ZSTD_MAGIC + b"\x20\x05" + _zstd_block(0, 5, b"hel", 1)),
+        (4, _ZSTD_MAGIC + b"\x21\x07\x05"),  # needs dictionary id 7
+    ],
+)
+def test_bad_sections_raise_value_error_naming_the_codec(codec, section):
+    from pipegen_spark.sources.kafka_wire import _COMPRESSION_NAMES, _decompress
+
+    with pytest.raises(ValueError, match=f"bad {_COMPRESSION_NAMES[codec]}"):
+        _decompress(codec, section)
+
+
+@pytest.mark.parametrize("codec", [2, 3, 4])  # snappy / lz4 / zstd
+def test_decompression_bomb_guard(codec, monkeypatch):
+    """A section that inflates past the cap raises instead of
+    allocating its whole output."""
+    import pyarrow as pa
+
+    from pipegen_spark.sources import kafka_wire as kw
+
+    batch = encode_record_batch([(None, b"a" * 5000)], compression=codec)
+    monkeypatch.setattr(kw, "MAX_DECOMPRESSED_BYTES", 1000)
+    with pytest.raises(ValueError, match="inflates past 1000 bytes"):
+        decode_record_batches(batch)
+    if codec == 2:  # the raw block librdkafka writes, not only xerial
+        raw = pa.Codec("snappy").compress(b"a" * 5000, asbytes=True)
+        with pytest.raises(ValueError, match="inflates past 1000 bytes"):
+            kw._decompress(codec, raw)
+
+
+def test_fetch_v4_max_bytes_returns_whole_records():
+    """KIP-74: under a small max_bytes the broker must return complete
+    records the client can decode and make progress on — never a
+    byte-sliced partial batch."""
+    from pipegen_spark.sources.kafka_wire import _Log
+
+    log = _Log(records=[])
+    log.append([(b"k%d" % i, b"v" * 100, 10 + i, ()) for i in range(50)])
+    got = 0
+    while got < 50:
+        batch = log.read_v2(got, max_bytes=400)
+        recs = decode_record_batches(batch)
+        assert recs, "fetch loop stalled: empty decode under max_bytes"
+        assert recs[0][0] == got  # contiguous offsets
+        got = recs[-1][0] + 1
+    assert got == 50
+    # a single oversized record still comes back whole (progress floor)
+    log2 = _Log(records=[])
+    log2.append([(b"k", b"x" * 5000, 1, ())])
+    recs = decode_record_batches(log2.read_v2(0, max_bytes=100))
+    assert len(recs) == 1 and recs[0][3] == b"x" * 5000
 
 
 def test_record_batch_partial_tail_dropped():
@@ -258,12 +460,44 @@ def test_record_batch_partial_tail_dropped():
     assert decode_record_batches(b1[:11]) == []
 
 
+def test_produce_fetch_roundtrip_over_socket():
+    """The executed network path with bare (key, value) records: produce
+    two batches, fetch from 0 and from a mid-offset, verify assigned
+    offsets, bytes and the base_timestamp every record falls back to."""
+    with FakeKafkaBroker() as (host, port):
+        c = KafkaWireClient(host, port)
+        try:
+            err, base = c.produce_v2(
+                "events", 0, [(b"k0", b"v0"), (None, b"v1")]
+            )
+            assert (err, base) == (ERR_NONE, 0)
+            err, base = c.produce_v2("events", 0, [(b"k2", b"v2")])
+            assert (err, base) == (ERR_NONE, 2)
+
+            err, hw, recs = c.fetch_v2("events", 0, 0)
+            assert err == ERR_NONE and hw == 3
+            assert recs == [
+                (0, 0, b"k0", b"v0", ()),
+                (1, 0, None, b"v1", ()),
+                (2, 0, b"k2", b"v2", ()),
+            ]
+            err, hw, recs = c.fetch_v2("events", 0, 2)
+            assert recs == [(2, 0, b"k2", b"v2", ())]
+
+            meta = c.metadata(["events"])
+            assert meta["brokers"][0][2] == port
+            t = meta["topics"]["events"]
+            assert t["error"] == ERR_NONE
+            assert t["partitions"][0]["partition"] == 0
+        finally:
+            c.close()
+
+
 def test_produce_fetch_v2_roundtrip_over_socket():
-    """The modern network path: Produce v3 + Fetch v4 moving magic-2
-    batches with timestamps and headers over a real socket, plus
-    cross-format interop — v0-produced records are served to a v2
-    fetch (the broker re-frames its log in the requested format,
-    exactly what a real broker's down/up-conversion does)."""
+    """The network path: Produce v3 + Fetch v4 moving magic-2 batches
+    with timestamps and headers over a real socket — offsets assigned
+    across two produces, fetches from 0 and from a mid-offset, and
+    Metadata naming the broker as leader."""
     with FakeKafkaBroker() as (host, port):
         c = KafkaWireClient(host, port)
         try:
@@ -292,52 +526,9 @@ def test_produce_fetch_v2_roundtrip_over_socket():
             err, hw, recs = c.fetch_v2("modern", 0, 2)
             assert recs == [(2, 999, b"k2", b"v2", ())]
 
-            # interop: v0 produce -> v2 fetch (ts -1, no headers)
-            err, base = c.produce("legacy", 0, [(b"a", b"1")])
-            assert err == ERR_NONE
-            err, hw, recs = c.fetch_v2("legacy", 0, 0)
-            assert recs == [(0, -1, b"a", b"1", ())]
-            # and v2 produce -> v0 fetch (timestamps dropped by format)
-            err, hw, old = c.fetch("modern", 0, 0)
-            assert [(o, k, v) for o, k, v in old] == [
-                (0, b"k0", b"v0"),
-                (1, None, b"v1"),
-                (2, b"k2", b"v2"),
-            ]
-
-            err, hw, recs = c.fetch_v2("nope", 0, 0)
-            assert err == ERR_UNKNOWN_TOPIC_OR_PARTITION
-            assert recs == []
-        finally:
-            c.close()
-
-
-def test_produce_fetch_roundtrip_over_socket():
-    """The executed network path: produce two batches, fetch from 0 and
-    from a mid-offset, verify assigned offsets and bytes."""
-    with FakeKafkaBroker() as (host, port):
-        c = KafkaWireClient(host, port)
-        try:
-            err, base = c.produce(
-                "events", 0, [(b"k0", b"v0"), (None, b"v1")]
-            )
-            assert (err, base) == (ERR_NONE, 0)
-            err, base = c.produce("events", 0, [(b"k2", b"v2")])
-            assert (err, base) == (ERR_NONE, 2)
-
-            err, hw, recs = c.fetch("events", 0, 0)
-            assert err == ERR_NONE and hw == 3
-            assert recs == [
-                (0, b"k0", b"v0"),
-                (1, None, b"v1"),
-                (2, b"k2", b"v2"),
-            ]
-            err, hw, recs = c.fetch("events", 0, 2)
-            assert recs == [(2, b"k2", b"v2")]
-
-            meta = c.metadata(["events"])
+            meta = c.metadata(["modern"])
             assert meta["brokers"][0][2] == port
-            t = meta["topics"]["events"]
+            t = meta["topics"]["modern"]
             assert t["error"] == ERR_NONE
             assert t["partitions"][0]["partition"] == 0
         finally:
@@ -352,11 +543,10 @@ def test_produce_fetch_roundtrip_over_socket():
 )
 @settings(max_examples=20, deadline=None)
 def test_small_max_bytes_fetch_loop_still_drains(sizes, max_bytes):
-    """KIP-74 progress guarantee on BOTH fetch formats: when the log
-    tail exceeds max_bytes — including single records larger than the
-    whole cap — every fetch returns at least one complete batch/message
-    and a fetch loop drains the log instead of stalling on a partial
-    frame the decoder silently drops."""
+    """KIP-74 progress guarantee: when the log tail exceeds max_bytes —
+    including single records larger than the whole cap — every fetch
+    returns at least one complete batch and a fetch loop drains the log
+    instead of stalling on a partial batch the decoder silently drops."""
     values = [bytes([i % 251]) * n for i, n in enumerate(sizes)]
     with FakeKafkaBroker() as (host, port):
         c = KafkaWireClient(host, port)
@@ -365,19 +555,17 @@ def test_small_max_bytes_fetch_loop_still_drains(sizes, max_bytes):
                 "caps", 0, [(None, v, 7, ()) for v in values],
                 base_timestamp=7,
             )
-            for fetch in (
-                lambda off: c.fetch_v2("caps", 0, off, max_bytes=max_bytes),
-                lambda off: c.fetch("caps", 0, off, max_bytes=max_bytes),
-            ):
-                got, offset, rounds = [], 0, 0
-                while offset < len(values):
-                    rounds += 1
-                    assert rounds <= len(values) + 1, "fetch loop stalled"
-                    _err, _hw, recs = fetch(offset)
-                    assert recs, "empty response mid-log (stall)"
-                    got.extend(r[-2] if len(r) == 5 else r[2] for r in recs)
-                    offset = recs[-1][0] + 1
-                assert got == values
+            got, offset, rounds = [], 0, 0
+            while offset < len(values):
+                rounds += 1
+                assert rounds <= len(values) + 1, "fetch loop stalled"
+                _err, _hw, recs = c.fetch_v2(
+                    "caps", 0, offset, max_bytes=max_bytes
+                )
+                assert recs, "empty response mid-log (stall)"
+                got.extend(r[3] for r in recs)
+                offset = recs[-1][0] + 1
+            assert got == values
         finally:
             c.close()
 
@@ -409,7 +597,7 @@ def test_offset_commit_fetch_golden_bytes():
     with FakeKafkaBroker() as (host, port):
         c = KafkaWireClient(host, port)
         try:
-            c.produce("t1", 0, [(b"k", b"v")] * 3)
+            c.produce_v2("t1", 0, [(b"k", b"v")] * 3)
         finally:
             c.close()
         # OffsetCommit v2: group "g", generation -1, member "",
@@ -464,7 +652,7 @@ def test_list_offsets_golden_bytes():
     with FakeKafkaBroker() as (host, port):
         c = KafkaWireClient(host, port)
         try:
-            c.produce("t2", 0, [(None, b"x")] * 5)
+            c.produce_v2("t2", 0, [(None, b"x")] * 5)
         finally:
             c.close()
         req = (
@@ -555,7 +743,7 @@ def test_fetch_unknown_topic_reports_error_code():
     with FakeKafkaBroker() as (host, port):
         c = KafkaWireClient(host, port)
         try:
-            err, hw, recs = c.fetch("nope", 0, 0)
+            err, hw, recs = c.fetch_v2("nope", 0, 0)
             assert err == ERR_UNKNOWN_TOPIC_OR_PARTITION
             assert recs == []
             meta = c.metadata(["nope"])
@@ -589,15 +777,15 @@ def test_confluent_avro_payload_survives_the_wire():
     with FakeKafkaBroker() as (host, port):
         c = KafkaWireClient(host, port)
         try:
-            err, base = c.produce(
+            err, base = c.produce_v2(
                 "wire", 3, [(None, p) for p in payloads]
             )
             assert (err, base) == (ERR_NONE, 0)
-            err, hw, recs = c.fetch("wire", 3, 0)
+            err, hw, recs = c.fetch_v2("wire", 3, 0)
         finally:
             c.close()
-    assert [v for _, _, v in recs] == payloads
-    for (_, _, v), row in zip(recs, rows):
+    assert [r[3] for r in recs] == payloads
+    for (_, _, _, v, _), row in zip(recs, rows):
         assert v[0] == 0x00
         assert struct.unpack(">I", v[1:5])[0] == 42
         assert codec.decode(v[5:]) == row
@@ -615,7 +803,7 @@ def test_concurrent_producers_assign_disjoint_offsets():
         def work(i: int) -> None:
             c = KafkaWireClient(host, port, client_id=f"p{i}")
             try:
-                _, base = c.produce(
+                _, base = c.produce_v2(
                     "t", 0, [(None, f"m{i}-{j}".encode()) for j in range(5)]
                 )
                 with lock:
@@ -633,41 +821,14 @@ def test_concurrent_producers_assign_disjoint_offsets():
         assert sorted(bases) == [i * 5 for i in range(8)]
         c = KafkaWireClient(host, port)
         try:
-            _, hw, recs = c.fetch("t", 0, 0)
+            _, hw, recs = c.fetch_v2("t", 0, 0)
         finally:
             c.close()
         assert hw == 40 and len(recs) == 40
-        assert [o for o, _, _ in recs] == list(range(40))
+        assert [r[0] for r in recs] == list(range(40))
 
 
 # --- property tests (hypothesis) --------------------------------------------
-
-_record = hst.tuples(
-    hst.one_of(hst.none(), hst.binary(max_size=40)),
-    hst.one_of(hst.none(), hst.binary(max_size=200)),
-)
-
-
-@given(hst.lists(_record, max_size=20), hst.integers(0, 1 << 40))
-@settings(max_examples=150)
-def test_message_set_roundtrip_property(recs, base):
-    """decode(encode(recs, base)) reproduces every record with
-    contiguous offsets from base."""
-    out = decode_message_set(encode_message_set(recs, base_offset=base))
-    assert out == [(base + i, k, v) for i, (k, v) in enumerate(recs)]
-
-
-@given(hst.lists(_record, min_size=1, max_size=8), hst.data())
-@settings(max_examples=150)
-def test_message_set_prefix_property(recs, data):
-    """Any PREFIX of a valid MessageSet decodes to a prefix of the
-    records (Kafka brokers legally return partial trailing messages in
-    Fetch responses — consumers must handle every cut point)."""
-    full = encode_message_set(recs)
-    cut = data.draw(hst.integers(0, len(full)))
-    out = decode_message_set(full[:cut])
-    assert out == [(i, k, v) for i, (k, v) in enumerate(recs)][: len(out)]
-
 
 _header = hst.tuples(
     hst.text(max_size=10),
@@ -723,17 +884,32 @@ def test_record_batch_prefix_property(recs, data):
     assert out == expect[: len(out)]
 
 
-@given(hst.lists(_record_v2, min_size=1, max_size=4), hst.data())
+@given(
+    hst.lists(_record_v2, min_size=1, max_size=4),
+    hst.sampled_from([0, 1, 2, 3, 4]),  # none/gzip/snappy/lz4/zstd
+    hst.booleans(),
+    hst.data(),
+)
 @settings(max_examples=200)
-def test_record_batch_corruption_is_loud_or_typed(recs, data):
-    """Single-byte corruption anywhere in a RecordBatch either raises
-    ValueError (CRC32C/magic/varint bounds) or returns a well-formed
-    record list — never any other exception type."""
+def test_record_batch_corruption_is_loud_or_typed(recs, codec, reseal, data):
+    """Single-byte corruption anywhere in a RecordBatch, under every
+    codec, either raises ValueError (CRC32C/magic/varint bounds/codec)
+    or returns a well-formed record list — never any other exception
+    type. With `reseal` the batch CRC32C is recomputed after the flip,
+    so a flip inside a compressed section reaches the codec instead of
+    stopping at the checksum."""
     full = bytearray(
-        encode_record_batch(recs, base_offset=3, base_timestamp=recs[0][2])
+        encode_record_batch(
+            recs, base_offset=3, base_timestamp=recs[0][2],
+            compression=codec,
+        )
     )
-    pos = data.draw(hst.integers(0, len(full) - 1))
+    # A resealed flip lands in the records section, after the 61-byte
+    # batch prelude; the CRC32C (bytes 17-20) covers bytes 21 onwards.
+    pos = data.draw(hst.integers(61 if reseal else 0, len(full) - 1))
     full[pos] = data.draw(hst.integers(0, 255))
+    if reseal:
+        full[17:21] = struct.pack(">I", crc32c(bytes(full[21:])))
     try:
         out = decode_record_batches(bytes(full))
     except ValueError:
@@ -744,31 +920,6 @@ def test_record_batch_corruption_is_loud_or_typed(recs, data):
         assert k is None or isinstance(k, bytes)
         assert v is None or isinstance(v, bytes)
         assert isinstance(hs, tuple)
-
-
-@given(
-    hst.lists(_record, min_size=1, max_size=6),
-    hst.data(),
-)
-@settings(max_examples=200)
-def test_message_set_corruption_is_loud_or_typed(recs, data):
-    """Single-byte corruption anywhere in a MessageSet either raises
-    ValueError (CRC/magic) or returns a well-formed (offset, key,
-    value) list — never any other exception type (the same contract
-    the codec fuzz suite enforces)."""
-    full = bytearray(encode_message_set(recs))
-    pos = data.draw(hst.integers(0, len(full) - 1))
-    val = data.draw(hst.integers(0, 255))
-    full[pos] = val
-    try:
-        out = decode_message_set(bytes(full))
-    except ValueError:
-        return
-    assert isinstance(out, list)
-    for off, k, v in out:
-        assert isinstance(off, int)
-        assert k is None or isinstance(k, bytes)
-        assert v is None or isinstance(v, bytes)
 
 
 # --- group membership (r13 follow-through) ------------------------------------------
@@ -901,10 +1052,34 @@ def test_join_group_inconsistent_protocol_is_loud():
             c2.close()
 
 
+def _produce_body(version: int) -> bytes:
+    """Produce request for topic "t" partition 0 with an empty record
+    set, in the request layout of `version` (protocol guide: v3 adds
+    transactional_id)."""
+    body = b"\xff\xff" if version >= 3 else b""  # transactional_id null
+    return body + struct.pack(">hii", 1, 1000, 1) + b"\x00\x01t" + (
+        struct.pack(">iii", 1, 0, 0)  # 1 partition: id 0, 0 record bytes
+    )
+
+
+def _fetch_body(version: int) -> bytes:
+    """Fetch request for topic "t" partition 0 from offset 0 (v3 adds
+    max_bytes, v4 isolation_level)."""
+    body = struct.pack(">iii", -1, 0, 0)  # replica, max_wait, min_bytes
+    if version >= 3:
+        body += struct.pack(">i", 1 << 20)
+    if version >= 4:
+        body += b"\x00"
+    return body + struct.pack(">i", 1) + b"\x00\x01t" + struct.pack(
+        ">iiqi", 1, 0, 0, 1 << 20
+    )
+
+
 def test_api_versions_advertises_the_served_surface():
     """ApiVersions v0 (KIP-35) — the request real clients open with.
     The advertised table must cover every API the client layer speaks,
-    at the versions it speaks them."""
+    and the broker must answer every Produce and Fetch version it
+    advertises (a client negotiates the highest common one)."""
     from pipegen_spark.sources import kafka_wire as kw
 
     with FakeKafkaBroker() as (host, port):
@@ -913,12 +1088,23 @@ def test_api_versions_advertises_the_served_surface():
             got = c.api_versions()
         finally:
             c.close()
+        corr = 100
+        for api, body in ((kw.API_PRODUCE, _produce_body),
+                          (kw.API_FETCH, _fetch_body)):
+            lo, hi = got[api]
+            for version in range(lo, hi + 1):
+                corr += 1
+                resp = _raw_call(
+                    host, port, _req_header(api, version, corr) + body(version)
+                )
+                assert resp[:4] == struct.pack(">i", corr), (api, version)
     assert got == FakeKafkaBroker.SUPPORTED_APIS
     # every client-side API constant is advertised
     for name in dir(kw):
         if name.startswith("API_"):
             assert getattr(kw, name) in got, name
-    # version spot checks: modern produce/fetch + the v0-2 offset APIs
-    assert got[kw.API_PRODUCE] == (0, 3)
-    assert got[kw.API_FETCH] == (0, 4)
+    # version spot checks: the record-batch produce/fetch pair + the
+    # v0-2 offset APIs
+    assert got[kw.API_PRODUCE] == (3, 3)
+    assert got[kw.API_FETCH] == (4, 4)
     assert got[kw.API_OFFSET_COMMIT] == (0, 2)

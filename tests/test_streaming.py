@@ -184,13 +184,18 @@ def test_metrics_collector_attached(spark, tmp_path):
         )
         q.processAllAvailable()
         q.stop()
+        # A query an earlier test stopped can deliver its termination
+        # event after addListener, so pick this query's summary by name.
+        def mine():
+            return [m for m in collector.summaries() if m["query"] == "mc_out"]
+
         deadline = time.time() + 10
         while time.time() < deadline:
-            s = collector.summaries()
+            s = mine()
             if s and s[0]["input_rows"] >= 50:
                 break
             time.sleep(0.2)
-        s = collector.summaries()
+        s = mine()
         assert s and s[0]["input_rows"] >= 50
         assert s[0]["backpressure"] in ("OK", "BACKPRESSURED")
     finally:
