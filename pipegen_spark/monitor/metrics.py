@@ -108,7 +108,10 @@ class MetricsCollector(StreamingQueryListener):
         m.state_rows = state_rows
 
     def onQueryTerminated(self, event) -> None:
-        m = self._get(str(event.id))
+        with self._lock:
+            m = self.queries.get(str(event.id))
+        if m is None:  # a query this collector never saw run
+            return
         if event.exception:
             m.errors.append(str(event.exception))
 

@@ -38,7 +38,9 @@ raise loudly.
 
 Scale notes: these run inside Arrow-batched `mapInPandas` workers —
 decoding is map-only, linear in executors, and payload bytes cross the
-Arrow boundary once. Pure-Python pixel loops are fine at test scale; at
+Arrow boundary once. JPEG pixel work (colour convert, DCT, quantise,
+upsample) is numpy over whole stacks of blocks, one path for one image
+or a corpus; entropy coding and the other codecs stay pure Python. At
 production scale the same call sites take a PIL/libvips-backed callable
 (identical signature), which is the documented swap point.
 """
@@ -50,26 +52,7 @@ import math
 import struct
 import zlib
 
-try:  # Optional BATCH acceleration for the DCT-family hot loops (r10).
-    # numpy is in the standard environment; the pure-Python paths remain
-    # both the no-numpy fallback and the bit-exactness reference
-    # (tests/test_codecs.py pins batch == scalar on random blocks). Every
-    # numpy expression below replays the scalar code's exact IEEE
-    # operation ORDER (accumulate in term order, same rint/clip), so
-    # results are bit-identical — the gated hashes do not move.
-    import numpy as _np
-except Exception:  # pragma: no cover - numpy is present in CI
-    _np = None
-
-#: Size gates for the batch paths — MEASURED, not assumed: on the
-#: testdata's thumbnail-scale images (1-36 blocks per component) the
-#: per-op numpy overhead (array allocation per accumulate step) made
-#: the batch decode ~2.5x SLOWER than the scalar loops, while on
-#: real-world image sizes (a 1 MP photo is ~16k blocks/component) the
-#: same path wins by orders of magnitude. Below these sizes the scalar
-#: loops run; tests force both paths by pinning the constants.
-_BATCH_MIN_BLOCKS = 64
-_BATCH_MIN_PIXELS = 1 << 12
+import numpy as _np
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
@@ -1209,109 +1192,27 @@ def _zigzag_order() -> list[int]:
 
 
 _ZIGZAG = _zigzag_order()
-_COS = [
+_DCT = _np.array([
     [
         (0.3535533905932738 if u == 0 else 0.5)
         * math.cos((2 * x + 1) * u * math.pi / 16)
         for x in range(8)
     ]
     for u in range(8)
-]  # C[u][x]: orthonormal 1-D DCT-II basis; FDCT = C·f·Cᵀ, IDCT = Cᵀ·F·C
+])  # C[u][x]: orthonormal 1-D DCT-II basis
 
 
-def _dct_2d(block: list[float], inverse: bool = False) -> list[float]:
-    """Separable 8x8 DCT/IDCT over a row-major 64-float block."""
-    tmp = [0.0] * 64
-    out = [0.0] * 64
-    if not inverse:  # rows: tmp = f·Cᵀ, then out = C·tmp
-        for r in range(8):
-            base = r * 8
-            for v in range(8):
-                cv = _COS[v]
-                tmp[base + v] = sum(
-                    block[base + x] * cv[x] for x in range(8)
-                )
-        for v in range(8):
-            for u in range(8):
-                cu = _COS[u]
-                out[u * 8 + v] = sum(
-                    tmp[x * 8 + v] * cu[x] for x in range(8)
-                )
-    else:  # f = Cᵀ·F·C
-        for u in range(8):
-            base = u * 8
-            for y in range(8):
-                tmp[base + y] = sum(
-                    block[base + v] * _COS[v][y] for v in range(8)
-                )
-        for y in range(8):
-            for x in range(8):
-                out[x * 8 + y] = sum(
-                    tmp[u * 8 + y] * _COS[u][x] for u in range(8)
-                )
-    return out
-
-
-def _dct_2d_batch(blocks, inverse: bool = False):
-    """Vectorized `_dct_2d` over an (n_blocks, 64) float64 array —
-    BIT-EXACT to the scalar version: each output coefficient
-    accumulates its 8 products in the same order the scalar `sum(...)`
-    does (0.0 + t0 + t1 + ...), so every float64 op sequence is
-    identical per element and only the block axis is vectorized."""
-    tmp = _np.zeros_like(blocks)
-    out = _np.zeros_like(blocks)
-    n = blocks.shape[0]
-    if not inverse:
-        for r in range(8):
-            base = r * 8
-            for v in range(8):
-                cv = _COS[v]
-                acc = _np.zeros(n)
-                for x in range(8):
-                    acc = acc + blocks[:, base + x] * cv[x]
-                tmp[:, base + v] = acc
-        for v in range(8):
-            for u in range(8):
-                cu = _COS[u]
-                acc = _np.zeros(n)
-                for x in range(8):
-                    acc = acc + tmp[:, x * 8 + v] * cu[x]
-                out[:, u * 8 + v] = acc
-    else:
-        for u in range(8):
-            base = u * 8
-            for y in range(8):
-                acc = _np.zeros(n)
-                for v in range(8):
-                    acc = acc + blocks[:, base + v] * _COS[v][y]
-                tmp[:, base + y] = acc
-        for y in range(8):
-            for x in range(8):
-                acc = _np.zeros(n)
-                for u in range(8):
-                    acc = acc + tmp[:, u * 8 + y] * _COS[u][x]
-                out[:, x * 8 + y] = acc
-    return out
-
-
-def _idct_plane_np(zzblocks, qtab, cbw: int, cpw: int, cph: int):
-    """Batch dequantize + IDCT + level-shift a component's whole
-    coefficient store into a flat int64 plane (decode hot path). Same
-    per-element ops as the scalar loop: float64 dequant products,
-    +128.0, round-half-even, clamp to [0, 255]."""
-    zz = _np.asarray(zzblocks, dtype=_np.float64)
-    q = _np.asarray(qtab, dtype=_np.float64)
-    blocks = _np.zeros_like(zz)
-    blocks[:, _np.asarray(_ZIGZAG)] = zz * q
-    sp = _dct_2d_batch(blocks, inverse=True) + 128.0
-    vals = _np.clip(_np.rint(sp), 0.0, 255.0).astype(_np.int64)
-    cbh = cph // 8
-    return (
-        vals.reshape(cbh, cbw, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(cph, cpw)
-        .ravel()
-    )
+def _dct(blocks, inverse: bool = False):
+    """2-D 8x8 DCT (T.81 §A.3.3) over an (n, 8, 8) float64 stack: the
+    forward transform is C·B·Cᵀ, the inverse Cᵀ·F·C. One call serves
+    one block or a whole corpus. The stack is made C-contiguous first:
+    numpy hands strided stacks to its own matmul loop, which rounds
+    differently from BLAS, and a block's coefficients must not depend
+    on the layout of the stack it arrives in."""
+    blocks = _np.ascontiguousarray(blocks)
+    if inverse:
+        return _DCT.T @ blocks @ _DCT
+    return _DCT @ blocks @ _DCT.T
 
 
 def _flat_huffman(symbols: list[int]) -> tuple[list[int], list[int], dict]:
@@ -1373,59 +1274,26 @@ class _BitWriter:
         self.buf += bytes([0xFF, 0xD0 | (n & 7)])
 
 
-def _rgb_to_ycbcr(r: int, g: int, b: int) -> tuple[int, int, int]:
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = 128.0 - 0.168735892 * r - 0.331264108 * g + 0.5 * b
-    cr = 128.0 + 0.5 * r - 0.418687589 * g - 0.081312411 * b
-    return (
-        min(255, max(0, round(y))),
-        min(255, max(0, round(cb))),
-        min(255, max(0, round(cr))),
-    )
-
-
-def _clamp8(v: float) -> int:
-    iv = round(v)
-    return 0 if iv < 0 else (255 if iv > 255 else iv)
-
-
-def _jpeg_planes(
-    width: int, height: int, pixels: bytes, channels: int
-) -> tuple[list[list[int]], int, int]:
-    """Component planes in YCbCr (or Y alone), edge-replicated to the
-    8-aligned (pw, ph) grid. Returns (planes, pw, ph)."""
-    pw, ph = (width + 7) // 8 * 8, (height + 7) // 8 * 8
-    planes: list[list[int]] = [[0] * (pw * ph) for _ in range(channels)]
-    for y in range(ph):
-        sy = min(y, height - 1)
-        for x in range(pw):
-            sx = min(x, width - 1)
-            if channels == 3:
-                i = (sy * width + sx) * 3
-                planes[0][y * pw + x], planes[1][y * pw + x], planes[2][
-                    y * pw + x
-                ] = _rgb_to_ycbcr(pixels[i], pixels[i + 1], pixels[i + 2])
-            else:
-                planes[0][y * pw + x] = pixels[sy * width + sx]
-    return planes, pw, ph
-
-
-def _quant_block(
-    plane: list[int], pw: int, by: int, bx: int, quant: int
-) -> list[int]:
-    """Level-shift + FDCT + quantize + zigzag one 8x8 block at plane
-    offset (by, bx) — the ONE coefficient producer shared by the
-    sequential emitter and the progressive block collector (the
-    'progressive decodes bit-identical to sequential' invariant rests
-    on both paths quantizing through this exact function)."""
-    block = [
-        float(plane[(by + r) * pw + bx + c]) - 128.0
-        for r in range(8)
-        for c in range(8)
-    ]
-    coefs = _dct_2d(block)
-    q = [int(round(coefs[i] / quant)) for i in range(64)]
-    return [q[i] for i in _ZIGZAG]
+def _check_jpeg_args(
+    width: int, height: int, pxs: list[bytes], channels: int, quant: int,
+    subsampling: str,
+) -> None:
+    """The argument checks both JPEG writers and `jpeg_stores_batch`
+    share."""
+    if channels not in (1, 3):
+        raise ValueError(f"unsupported channel count {channels}")
+    exp = width * height * channels
+    for p in pxs:
+        if len(p) != exp:
+            raise ValueError(
+                f"pixel buffer is {len(p)} bytes, expected {exp}"
+            )
+    if not 1 <= quant <= 255:
+        raise ValueError(f"quant must be in [1, 255], got {quant}")
+    if subsampling not in ("444", "420"):
+        raise ValueError(f"unsupported subsampling {subsampling!r}")
+    if subsampling == "420" and channels != 3:
+        raise ValueError("4:2:0 requires 3 channels (chroma to subsample)")
 
 
 def _encode_block_seq(
@@ -1436,9 +1304,9 @@ def _encode_block_seq(
 ) -> None:
     """Sequential DC/AC entropy-code one quantized 8x8 zigzag block —
     the shared baseline block emitter. Callers precompute the
-    coefficient store per plane via `_quant_blocks` (batched FDCT) and
-    hand blocks in MCU walk order; entropy coding itself is inherently
-    sequential (DC prediction + bit packing)."""
+    coefficient stores via `jpeg_stores_batch` and hand blocks in MCU
+    walk order; entropy coding itself is inherently sequential (DC
+    prediction + bit packing)."""
     diff = zz[0] - dc_prev[ci]
     dc_prev[ci] = zz[0]
     size = abs(diff).bit_length()
@@ -1470,43 +1338,6 @@ def _encode_block_seq(
         run = 0
 
 
-def _jpeg_planes_420(
-    width: int, height: int, pixels: bytes
-) -> tuple[tuple, tuple, tuple]:
-    """4:2:0 component planes: Y edge-replicated to the 16-aligned MCU
-    grid, Cb/Cr 2x2 box-averaged (round-half-up) onto the 8-aligned
-    half-resolution grid. Returns ((yp, yw, yh), (cb, cw, ch),
-    (cr, cw, ch))."""
-    mcux, mcuy = (width + 15) // 16, (height + 15) // 16
-    yw, yh = 16 * mcux, 16 * mcuy
-    yp = [0] * (yw * yh)
-    cbf = [0] * (yw * yh)
-    crf = [0] * (yw * yh)
-    for y in range(yh):
-        sy = min(y, height - 1)
-        for x in range(yw):
-            sx = min(x, width - 1)
-            i = (sy * width + sx) * 3
-            j = y * yw + x
-            yp[j], cbf[j], crf[j] = _rgb_to_ycbcr(
-                pixels[i], pixels[i + 1], pixels[i + 2]
-            )
-    cw, ch_ = 8 * mcux, 8 * mcuy
-    cb = [0] * (cw * ch_)
-    cr = [0] * (cw * ch_)
-    for y in range(ch_):
-        for x in range(cw):
-            j0 = (2 * y) * yw + 2 * x
-            j1 = j0 + yw
-            cb[y * cw + x] = (
-                cbf[j0] + cbf[j0 + 1] + cbf[j1] + cbf[j1 + 1] + 2
-            ) // 4
-            cr[y * cw + x] = (
-                crf[j0] + crf[j0 + 1] + crf[j1] + crf[j1 + 1] + 2
-            ) // 4
-    return (yp, yw, yh), (cb, cw, ch_), (cr, cw, ch_)
-
-
 def jpeg_encode(
     width: int,
     height: int,
@@ -1525,27 +1356,12 @@ def jpeg_encode(
     computed flat Huffman tables, one DQT/DC-DHT/AC-DHT shared by all
     components. `pixels` is row-major packed samples (1=gray,
     3=RGB)."""
-    if channels not in (1, 3):
-        raise ValueError(f"unsupported channel count {channels}")
-    if len(pixels) != width * height * channels:
-        raise ValueError(
-            f"pixel buffer is {len(pixels)} bytes, expected "
-            f"{width * height * channels}"
-        )
-    if not 1 <= quant <= 255:
-        raise ValueError(f"quant must be in [1, 255], got {quant}")
-    if subsampling not in ("444", "420"):
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    if subsampling == "420" and channels != 3:
-        raise ValueError("4:2:0 requires 3 channels (chroma to subsample)")
+    _check_jpeg_args(width, height, [pixels], channels, quant, subsampling)
 
     w = _BitWriter()
-    stores, dims = (
-        _stores
-        if _stores is not None
-        else _jpeg_stores(width, height, pixels, channels, quant,
-                          subsampling)
-    )
+    stores, dims = _stores or jpeg_stores_batch(
+        width, height, [pixels], channels, quant, subsampling
+    )[0]
     if subsampling == "444":
         pw, ph = dims[0]
         nbx = pw // 8
@@ -1769,62 +1585,27 @@ def _emit_ac_refine(
     _flush_eobrun(w, eobrun, pending)
 
 
-def _jpeg_stores(
-    width: int, height: int, pixels: bytes, channels: int, quant: int,
-    subsampling: str,
-) -> tuple[list[list[list[int]]], list[tuple[int, int]]]:
-    """Planes + FDCT + quantize: the coefficient-store phase both JPEG
-    writers share. Returns (stores, dims): stores[ci] is the zigzag
-    block list `_quant_blocks` produces for component ci, dims[ci] the
-    (pw, ph) of its padded plane. Split out so `jpeg_stores_batch` can
-    compute the same stores for MANY same-geometry images in one numpy
-    batch (guide §4.2 — the per-image planes are too small for the
-    64-block numpy threshold, so per-image encodes run the scalar DCT;
-    batching across images amortizes it 17x)."""
-    if subsampling == "444":
-        planes, pw, ph = _jpeg_planes(width, height, pixels, channels)
-        return (
-            [
-                _quant_blocks(planes[ci], pw, ph, quant)
-                for ci in range(channels)
-            ],
-            [(pw, ph)] * channels,
-        )
-    (yp, yw, yh), (cbp, cw, ch_), (crp, _, _) = _jpeg_planes_420(
-        width, height, pixels
-    )
-    return (
-        [
-            _quant_blocks(yp, yw, yh, quant),
-            _quant_blocks(cbp, cw, ch_, quant),
-            _quant_blocks(crp, cw, ch_, quant),
-        ],
-        [(yw, yh), (cw, ch_), (cw, ch_)],
-    )
-
-
 def _fdct_stores_batch(planes, pw: int, ph: int, quant: int) -> list:
-    """FDCT + quantize an (n, ph, pw) int64 plane stack into n zigzag
-    block stores — the batched form of `_quant_blocks` over the image
-    axis. Same per-element float64 ops (level shift, _dct_2d_batch,
-    rint-quantize), so each store is bit-identical to the scalar one."""
+    """Level-shift + FDCT + quantize + zigzag an (n, ph, pw) int64 plane
+    stack into n coefficient stores: per image, the zigzag blocks in
+    block-grid raster order that the sequential emitter, the
+    progressive encoder and the decoder all walk."""
     n = planes.shape[0]
     cbh, cbw = ph // 8, pw // 8
     blocks = (
         planes.astype(_np.float64).reshape(n, cbh, 8, cbw, 8)
         .transpose(0, 1, 3, 2, 4)
-        .reshape(n * cbh * cbw, 64)
+        .reshape(-1, 8, 8)
         - 128.0
     )
-    coefs = _dct_2d_batch(blocks)
+    coefs = _dct(blocks).reshape(-1, 64)
     qz = _np.rint(coefs / float(quant)).astype(_np.int64)
-    return qz[:, _np.asarray(_ZIGZAG)].reshape(n, cbh * cbw, 64).tolist()
+    return qz[:, _ZIGZAG].reshape(n, cbh * cbw, 64).tolist()
 
 
 def _ycbcr_planes_batch(img):
-    """RGB->YCbCr over an (n, H, W, 3) float64 stack — the same float64
-    expressions (and op order) as `_rgb_to_ycbcr`, with numpy's
-    round-half-even `rint` matching Python `round`."""
+    """RGB->YCbCr (JFIF) over an (n, H, W, 3) float64 stack, rounded
+    half-even and clamped to [0, 255]."""
     r, g, b = img[..., 0], img[..., 1], img[..., 2]
     y = 0.299 * r + 0.587 * g + 0.114 * b
     cb = 128.0 - 0.168735892 * r - 0.331264108 * g + 0.5 * b
@@ -1843,106 +1624,49 @@ def jpeg_stores_batch(
     quant: int = 1,
     subsampling: str = "444",
 ) -> list[tuple]:
-    """Coefficient stores for MANY same-geometry images in one numpy
-    batch: plane construction (edge replication, color convert, 4:2:0
-    box-average) and FDCT+quantize vectorized across the image axis.
-    Per-image encodes fall under the 64-block numpy threshold and run
-    the scalar DCT at ~235 us/block; batched across a corpus the same
-    transform costs ~14 us/block (guide §4.2 — hand whole batches to
-    vectorized native code). Bit-exact: every float64 op sequence per
-    element matches the scalar path, only the image axis is batched.
+    """Coefficient stores for same-geometry images — the pixel half of
+    both JPEG writers, which call it with one image. Plane construction
+    (edge replication to the MCU grid, color convert, 4:2:0 chroma 2x2
+    box-average with round-half-up) and FDCT + quantize run as numpy
+    over the whole stack, so a corpus costs one call instead of one per
+    image. An image's stores do not depend on what it is batched with.
 
-    Returns one `(stores, dims)` per input, each exactly what the
-    scalar phase produces — pass to `jpeg_encode(..., _stores=...)` /
-    `jpeg_encode_progressive(..., _stores=...)`; one stores tuple can
-    feed BOTH writers (they quantize identically by construction)."""
-    if channels not in (1, 3):
-        raise ValueError(f"unsupported channel count {channels}")
-    if not 1 <= quant <= 255:
-        raise ValueError(f"quant must be in [1, 255], got {quant}")
-    if subsampling not in ("444", "420"):
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    if subsampling == "420" and channels != 3:
-        raise ValueError("4:2:0 requires 3 channels (chroma to subsample)")
-    exp = width * height * channels
-    for p in pxs:
-        if len(p) != exp:
-            raise ValueError(
-                f"pixel buffer is {len(p)} bytes, expected {exp}"
-            )
-    if _np is None or not pxs:
-        return [
-            _jpeg_stores(width, height, p, channels, quant, subsampling)
-            for p in pxs
-        ]
+    Returns one `(stores, dims)` per input: stores[ci] is component
+    ci's zigzag block list, dims[ci] the (pw, ph) of its padded plane.
+    Pass one to `jpeg_encode(..., _stores=...)` /
+    `jpeg_encode_progressive(..., _stores=...)`; the same tuple can
+    feed BOTH writers."""
+    _check_jpeg_args(width, height, pxs, channels, quant, subsampling)
+    if not pxs:
+        return []
     n = len(pxs)
     arr = (
         _np.frombuffer(b"".join(pxs), dtype=_np.uint8)
         .reshape(n, height, width, channels)
         .astype(_np.float64)
     )
-    if subsampling == "444":
-        pw, ph = (width + 7) // 8 * 8, (height + 7) // 8 * 8
-        sy = _np.minimum(_np.arange(ph), height - 1)
-        sx = _np.minimum(_np.arange(pw), width - 1)
-        img = arr[:, sy[:, None], sx[None, :], :]
-        if channels == 3:
-            planes = _ycbcr_planes_batch(img)
-        else:
-            planes = (img[..., 0].astype(_np.int64),)
-        per_chan = [
-            _fdct_stores_batch(pl, pw, ph, quant) for pl in planes
-        ]
-        dims = [(pw, ph)] * channels
-        return [
-            ([per_chan[ci][i] for ci in range(channels)], dims)
-            for i in range(n)
-        ]
-    mcux, mcuy = (width + 15) // 16, (height + 15) // 16
-    yw, yh = 16 * mcux, 16 * mcuy
-    sy = _np.minimum(_np.arange(yh), height - 1)
-    sx = _np.minimum(_np.arange(yw), width - 1)
+    mcu = 8 if subsampling == "444" else 16
+    pw, ph = -(-width // mcu) * mcu, -(-height // mcu) * mcu
+    sy = _np.minimum(_np.arange(ph), height - 1)
+    sx = _np.minimum(_np.arange(pw), width - 1)
     img = arr[:, sy[:, None], sx[None, :], :]
-    yp, cbf, crf = _ycbcr_planes_batch(img)
-    cw, ch_ = 8 * mcux, 8 * mcuy
-    cb2 = (cbf.reshape(n, ch_, 2, cw, 2).sum(axis=(2, 4)) + 2) // 4
-    cr2 = (crf.reshape(n, ch_, 2, cw, 2).sum(axis=(2, 4)) + 2) // 4
-    ys = _fdct_stores_batch(yp, yw, yh, quant)
-    cbs = _fdct_stores_batch(cb2, cw, ch_, quant)
-    crs = _fdct_stores_batch(cr2, cw, ch_, quant)
-    dims = [(yw, yh), (cw, ch_), (cw, ch_)]
-    return [([ys[i], cbs[i], crs[i]], dims) for i in range(n)]
-
-
-def _quant_blocks(
-    plane: list[int], pw: int, ph: int, quant: int
-) -> list[list[int]]:
-    """FDCT + quantize a component plane into zigzag coefficient blocks
-    in block-grid raster order (the coefficient-domain store the
-    sequential emitter, the progressive encoder and the decoder all
-    walk). Batched through numpy when available (bit-exact — see
-    _dct_2d_batch); the scalar fallback is also the parity reference."""
-    if (
-        _np is not None
-        and (pw // 8) * (ph // 8) >= _BATCH_MIN_BLOCKS
-    ):
-        arr = (
-            _np.asarray(plane, dtype=_np.float64).reshape(ph, pw) - 128.0
+    if channels == 3:
+        planes = _ycbcr_planes_batch(img)
+    else:
+        planes = (img[..., 0].astype(_np.int64),)
+    dims = [(pw, ph)] * channels
+    if subsampling == "420":
+        cw, ch_ = pw // 2, ph // 2
+        planes = (planes[0],) + tuple(
+            (p.reshape(n, ch_, 2, cw, 2).sum(axis=(2, 4)) + 2) // 4
+            for p in planes[1:]
         )
-        cbh, cbw = ph // 8, pw // 8
-        blocks = (
-            arr.reshape(cbh, 8, cbw, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(cbh * cbw, 64)
-        )
-        coefs = _dct_2d_batch(blocks)
-        qz = _np.rint(coefs / float(quant)).astype(_np.int64)
-        return qz[:, _np.asarray(_ZIGZAG)].tolist()
-    return [
-        _quant_block(plane, pw, by, bx, quant)
-        for by in range(0, ph, 8)
-        for bx in range(0, pw, 8)
+        dims = [(pw, ph), (cw, ch_), (cw, ch_)]
+    per_chan = [
+        _fdct_stores_batch(pl, *dims[ci], quant)
+        for ci, pl in enumerate(planes)
     ]
+    return [([pc[i] for pc in per_chan], dims) for i in range(n)]
 
 
 def jpeg_encode_progressive(
@@ -1975,27 +1699,12 @@ def jpeg_encode_progressive(
     buffered refinement bits reset per spec §E.2.4 / §G.1.2.2 — runs
     cannot span a restart; in AC scans a "unit" is one block of the
     un-padded grid)."""
-    if channels not in (1, 3):
-        raise ValueError(f"unsupported channel count {channels}")
-    if len(pixels) != width * height * channels:
-        raise ValueError(
-            f"pixel buffer is {len(pixels)} bytes, expected "
-            f"{width * height * channels}"
-        )
-    if not 1 <= quant <= 255:
-        raise ValueError(f"quant must be in [1, 255], got {quant}")
-    if subsampling not in ("444", "420"):
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    if subsampling == "420" and channels != 3:
-        raise ValueError("4:2:0 requires 3 channels (chroma to subsample)")
+    _check_jpeg_args(width, height, [pixels], channels, quant, subsampling)
     orders: list[list[int]] | None = None
     per_mcu: list[int] | None = None
-    blocks, dims = (
-        _stores
-        if _stores is not None
-        else _jpeg_stores(width, height, pixels, channels, quant,
-                          subsampling)
-    )
+    blocks, dims = _stores or jpeg_stores_batch(
+        width, height, [pixels], channels, quant, subsampling
+    )[0]
     if subsampling == "444":
         ac_blocks = blocks  # used grid == padded grid at Hi=Vi=1
         comp_hv = [0x11] * channels
@@ -2361,15 +2070,14 @@ def jpeg_decode(data: bytes) -> tuple[int, int, int, bytes]:
     Decoding is coefficient-domain: scans accumulate into per-block
     zigzag coefficient stores; dequantize + IDCT happen once at
     EOI."""
-    return _jpeg_pixels(*_jpeg_parse(data))
+    return jpeg_decode_batch([data])[0]
 
 
 def _jpeg_parse(data: bytes):
     """Marker walk + entropy decode of a JPEG stream into per-component
-    zigzag coefficient stores — the sequential half of `jpeg_decode`,
-    split out so `jpeg_decode_batch` can run the dequant+IDCT+color
-    half across many images in one numpy batch. Returns
-    (width, height, comps, qtabs, geom, coefs)."""
+    zigzag coefficient stores — the sequential half of decoding;
+    `jpeg_decode_batch` runs the numeric half over many images at
+    once. Returns (width, height, comps, qtabs, geom, coefs)."""
     if data[:3] != JPEG_SOI or len(data) < 4:
         raise ValueError("not a JPEG: bad SOI")
     pos = 2
@@ -2543,126 +2251,15 @@ def _jpeg_parse(data: bytes):
     return width, height, comps, qtabs, geom, coefs
 
 
-def _jpeg_pixels(
-    width: int, height: int, comps, qtabs, geom, coefs
-) -> tuple[int, int, int, bytes]:
-    """Dequantize + IDCT + upsample + color-convert parsed coefficient
-    stores into (width, height, channels, raw pixels) — the numeric
-    half of `jpeg_decode`."""
-    nf = len(comps)
-    hmax, vmax = geom["hmax"], geom["vmax"]
-    planes: list = []
-    cpws: list[int] = []
-    for ci in range(nf):
-        qtab = qtabs.get(comps[ci][1])
-        if qtab is None:
-            raise ValueError("scan references missing table")
-        h, v, cbw, _, _ = geom["comps"][ci]
-        cpw, cph = cbw * 8, geom["mcuy"] * v * 8
-        if _np is not None and len(coefs[ci]) >= _BATCH_MIN_BLOCKS:
-            plane = _idct_plane_np(coefs[ci], qtab, cbw, cpw, cph)
-        else:
-            plane = [0] * (cpw * cph)
-            for bi, zz in enumerate(coefs[ci]):
-                by, bx = (bi // cbw) * 8, (bi % cbw) * 8
-                block = [0.0] * 64
-                for i, zi in enumerate(_ZIGZAG):
-                    block[zi] = float(zz[i] * qtab[i])
-                spatial = _dct_2d(block, inverse=True)
-                for r in range(8):
-                    row = (by + r) * cpw + bx
-                    for c in range(8):
-                        plane[row + c] = _clamp8(
-                            spatial[r * 8 + c] + 128.0
-                        )
-        planes.append(plane)
-        cpws.append(cpw)
-
-    out = bytearray(width * height * nf)
-    if nf == 1:
-        plane, cpw = planes[0], cpws[0]
-        if _np is not None and width * height >= _BATCH_MIN_PIXELS:
-            arr = _np.asarray(plane).reshape(-1, cpw)
-            out[:] = arr[:height, :width].astype(_np.uint8).tobytes()
-        else:
-            for y in range(height):
-                out[y * width : (y + 1) * width] = bytes(
-                    plane[y * cpw : y * cpw + width]
-                )
-    else:
-        py, pb, pr = planes
-        (hy, vy, _, _, _), (hb, vb, _, _, _), (hr, vr, _, _, _) = geom[
-            "comps"
-        ]
-        if _np is not None and width * height >= _BATCH_MIN_PIXELS:
-            # Vectorized sample replication + color convert — identical
-            # per-element float64 expressions as the scalar loop below
-            # (same mult/sub order, rint + clip), only the pixel grid
-            # is batched.
-            ys = _np.arange(height)
-            xs = _np.arange(width)
-
-            def samp(p, cpw_c, hc, vc):
-                rows = (ys * vc // vmax)[:, None] * cpw_c
-                cols = (xs * hc // hmax)[None, :]
-                return _np.asarray(p)[(rows + cols).ravel()].reshape(
-                    height, width
-                )
-
-            yy = samp(py, cpws[0], hy, vy)
-            cb = samp(pb, cpws[1], hb, vb) - 128
-            cr = samp(pr, cpws[2], hr, vr) - 128
-
-            def cl(v):
-                return _np.clip(_np.rint(v), 0.0, 255.0)
-
-            rgb = _np.stack(
-                [
-                    cl(yy + 1.402 * cr),
-                    cl(yy - 0.344136 * cb - 0.714136 * cr),
-                    cl(yy + 1.772 * cb),
-                ],
-                axis=-1,
-            )
-            out[:] = rgb.astype(_np.uint8).tobytes()
-        else:
-            for y in range(height):
-                for x in range(width):
-                    # per-component sample replication (integer
-                    # downshift of the full-res coordinate into the
-                    # comp grid)
-                    yy = py[(y * vy // vmax) * cpws[0] + (x * hy // hmax)]
-                    cb = (
-                        pb[(y * vb // vmax) * cpws[1] + (x * hb // hmax)]
-                        - 128
-                    )
-                    cr = (
-                        pr[(y * vr // vmax) * cpws[2] + (x * hr // hmax)]
-                        - 128
-                    )
-                    o = (y * width + x) * 3
-                    out[o] = _clamp8(yy + 1.402 * cr)
-                    out[o + 1] = _clamp8(
-                        yy - 0.344136 * cb - 0.714136 * cr
-                    )
-                    out[o + 2] = _clamp8(yy + 1.772 * cb)
-    return width, height, nf, bytes(out)
-
-
 def jpeg_decode_batch(
     datas: list[bytes],
 ) -> list[tuple[int, int, int, bytes]]:
-    """Decode MANY JPEGs: the marker walk + Huffman decode stays
-    sequential per image (a bitstream has no block axis), but the
-    dequant + IDCT + upsample + color-convert half runs as ONE numpy
-    batch per group of images sharing geometry and tables (guide §4.2).
-    Small images fall under `_BATCH_MIN_BLOCKS` individually and pay
-    the ~235 us/block scalar IDCT in `jpeg_decode`; batched across a
-    corpus the same transform costs ~14 us/block. Bit-exact to
-    `jpeg_decode` per element: `_dct_2d_batch` + the identical float64
-    color expressions, only the image axis is batched."""
-    if _np is None or len(datas) < 2:
-        return [jpeg_decode(d) for d in datas]
+    """Decode JPEGs — the one decode path; `jpeg_decode` calls it with
+    one stream. The marker walk + Huffman decode stays sequential per
+    image (a bitstream has no block axis); the dequantize + IDCT +
+    upsample + color-convert half runs as one numpy pass per group of
+    images sharing geometry and tables. An image decodes to the same
+    pixels whatever it is batched with."""
     parsed = [_jpeg_parse(d) for d in datas]
     groups: dict[tuple, list[int]] = {}
     for i, (w, h, comps, qtabs, geom, _coefs) in enumerate(parsed):
@@ -2674,67 +2271,55 @@ def jpeg_decode_batch(
         )
         groups.setdefault(key, []).append(i)
     out: list = [None] * len(datas)
-    zig = _np.asarray(_ZIGZAG)
     for key, idxs in groups.items():
         w, h, comps, _qt, hmax, vmax, mcux, mcuy, gcomps = key
         nf = len(comps)
         n = len(idxs)
         qtabs0 = parsed[idxs[0]][3]
         planes = []
-        cpws = []
         for ci in range(nf):
             qtab = qtabs0.get(comps[ci][1])
             if qtab is None:
                 raise ValueError("scan references missing table")
-            v_ = gcomps[ci][1]
-            cbw = gcomps[ci][2]
-            cpw, cph = cbw * 8, mcuy * v_ * 8
-            cbh = cph // 8
+            cbw, cbh = gcomps[ci][2], mcuy * gcomps[ci][1]
             zz = _np.asarray(
                 [parsed[i][5][ci] for i in idxs], dtype=_np.float64
-            ).reshape(n * cbh * cbw, 64)
+            ).reshape(-1, 64)
             blocks = _np.zeros_like(zz)
-            blocks[:, zig] = zz * _np.asarray(qtab, dtype=_np.float64)
-            sp = _dct_2d_batch(blocks, inverse=True) + 128.0
+            blocks[:, _ZIGZAG] = zz * _np.asarray(qtab, dtype=_np.float64)
+            sp = _dct(blocks.reshape(-1, 8, 8), inverse=True) + 128.0
             vals = _np.clip(_np.rint(sp), 0.0, 255.0).astype(_np.int64)
             planes.append(
                 vals.reshape(n, cbh, cbw, 8, 8)
                 .transpose(0, 1, 3, 2, 4)
-                .reshape(n, cph, cpw)
+                .reshape(n, cbh * 8, cbw * 8)
             )
-            cpws.append(cpw)
         if nf == 1:
             pix = planes[0][:, :h, :w].astype(_np.uint8)
             for j, i in enumerate(idxs):
                 out[i] = (w, h, 1, pix[j].tobytes())
-        else:
-            ys = _np.arange(h)
-            xs = _np.arange(w)
-
-            def samp(p, hc, vc):
-                return p[:, (ys * vc // vmax)[:, None],
-                         (xs * hc // hmax)[None, :]]
-
-            (hy, vy, _, _, _), (hb, vb, _, _, _), (hr, vr, _, _, _) = (
-                gcomps
-            )
-            yy = samp(planes[0], hy, vy)
-            cb = samp(planes[1], hb, vb) - 128
-            cr = samp(planes[2], hr, vr) - 128
-
-            def cl(v):
-                return _np.clip(_np.rint(v), 0.0, 255.0)
-
-            rgb = _np.stack(
-                [
-                    cl(yy + 1.402 * cr),
-                    cl(yy - 0.344136 * cb - 0.714136 * cr),
-                    cl(yy + 1.772 * cb),
-                ],
-                axis=-1,
-            ).astype(_np.uint8)
-            for j, i in enumerate(idxs):
-                out[i] = (w, h, 3, rgb[j].tobytes())
+            continue
+        # chroma upsampling by sample replication: integer downshift of
+        # the full-res coordinate into each component's grid
+        ys = _np.arange(h)
+        xs = _np.arange(w)
+        yy, cb, cr = (
+            p[:, (ys * vc // vmax)[:, None], (xs * hc // hmax)[None, :]]
+            for p, (hc, vc, _, _, _) in zip(planes, gcomps)
+        )
+        cb = cb - 128
+        cr = cr - 128
+        rgb = _np.stack(
+            [
+                yy + 1.402 * cr,
+                yy - 0.344136 * cb - 0.714136 * cr,
+                yy + 1.772 * cb,
+            ],
+            axis=-1,
+        )
+        rgb = _np.clip(_np.rint(rgb), 0.0, 255.0).astype(_np.uint8)
+        for j, i in enumerate(idxs):
+            out[i] = (w, h, 3, rgb[j].tobytes())
     return out
 
 

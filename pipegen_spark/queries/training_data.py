@@ -1621,10 +1621,10 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         for pdf in batches:
-            # Batched planes+FDCT (encode) and IDCT+color (decode) across
-            # the pandas batch — guide §4.2; byte-identical to the
-            # per-doc path (codecs parity tests). Entropy coding stays
-            # per-doc (sequential by nature).
+            # Planes+FDCT (encode) and IDCT+color (decode) run once over
+            # the whole pandas batch; a doc's bytes do not depend on its
+            # batch (tests/test_codecs.py). Entropy coding stays per-doc
+            # (sequential by nature).
             ids = list(pdf["doc_id"])
             pxs = [
                 (hashlib.md5((t or "").encode("utf-8")).digest() * 12)[
@@ -1649,7 +1649,7 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"doc_id": ids, "n_px": n_px, "decode_ok": ok}
             )
 
-    # The codec stage is CPU-heavy Python (~2 ms/doc of pure-Python DCT);
+    # The codec stage is CPU-heavy Python (pure-Python Huffman coding);
     # a single-row-group parquet file would otherwise feed it through ONE
     # task. Round-robin the narrow (id, text) projection across the
     # executors first — measured 17.9 s -> ~1 s at sf0.1 on local[32];
@@ -1702,9 +1702,9 @@ def multimodal_jpeg_progressive(
         )
 
         for pdf in batches:
-            # Batched codec phases across the pandas batch (guide §4.2);
-            # one stores tuple feeds both writers. Byte-identical to the
-            # per-doc path (codecs parity tests).
+            # Codec pixel phases run once over the pandas batch; one
+            # stores tuple feeds both writers. A doc's bytes do not
+            # depend on its batch (tests/test_codecs.py).
             ids = list(pdf["doc_id"])
             pxs = [
                 (hashlib.md5((t or "").encode("utf-8")).digest() * 12)[
@@ -1806,12 +1806,12 @@ def multimodal_jpeg_420(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         w0, h0 = 7, 13
         for pdf in batches:
-            # Batched codec phases (guide §4.2): planes+FDCT+quantize run
-            # as ONE numpy batch across the pandas batch (and one stores
-            # tuple feeds BOTH writers — they quantize identically), the
-            # decode-side dequant+IDCT+color likewise; only the
-            # inherently sequential entropy coding stays per-doc.
-            # Byte-identical to the per-doc path (codecs parity tests).
+            # Codec pixel phases: planes+FDCT+quantize run as ONE numpy
+            # batch across the pandas batch (and one stores tuple feeds
+            # BOTH writers — they quantize identically), the decode-side
+            # dequant+IDCT+color likewise; only the inherently
+            # sequential entropy coding stays per-doc. A doc's bytes do
+            # not depend on its batch (tests/test_codecs.py).
             ids = list(pdf["doc_id"])
             seeds = [
                 hashlib.md5((t or "").encode("utf-8")).digest()

@@ -431,10 +431,16 @@ def _decompress(codec: int, section: bytes) -> bytes:
     ValueError naming the codec."""
     name = _COMPRESSION_NAMES[codec]
     if codec == COMPRESSION_GZIP:
+        inflater = zlib.decompressobj(47)
         try:
-            return zlib.decompress(section, wbits=47)
+            out = inflater.decompress(section, MAX_DECOMPRESSED_BYTES + 1)
         except zlib.error as e:
             raise ValueError(f"bad gzip records section: {e}") from e
+        if len(out) > MAX_DECOMPRESSED_BYTES:
+            raise ValueError(f"inflates past {MAX_DECOMPRESSED_BYTES} bytes")
+        if not inflater.eof:
+            raise ValueError("bad gzip records section: truncated stream")
+        return out
     import pyarrow as pa
 
     try:

@@ -14,6 +14,7 @@ encoders cannot make the roundtrips circular.
 
 from __future__ import annotations
 
+import gzip
 import struct
 
 import pytest
@@ -392,6 +393,7 @@ def test_spec_golden_sections_decode(codec, section, expected):
 @pytest.mark.parametrize(
     "codec,section",
     [
+        (1, gzip.compress(b"hello", mtime=0)[:-4]),  # truncated member
         (2, b"\x05" + bytes([4 << 2]) + b"ab"),  # literal past block end
         (2, b"\x05\x00a\x01\x00"),  # zero copy offset
         (2, b"\x80\x80\x80\x80\x80\x01"),  # length uvarint over 5 bytes
@@ -410,7 +412,7 @@ def test_bad_sections_raise_value_error_naming_the_codec(codec, section):
         _decompress(codec, section)
 
 
-@pytest.mark.parametrize("codec", [2, 3, 4])  # snappy / lz4 / zstd
+@pytest.mark.parametrize("codec", [1, 2, 3, 4])  # gzip/snappy/lz4/zstd
 def test_decompression_bomb_guard(codec, monkeypatch):
     """A section that inflates past the cap raises instead of
     allocating its whole output."""

@@ -47,6 +47,17 @@ def test_dashboard_routes():
         srv.stop()
 
 
+def test_collector_ignores_termination_of_unseen_query():
+    """A termination event for a query the collector never saw start or
+    progress adds no phantom entry."""
+    from types import SimpleNamespace
+
+    collector = MetricsCollector()
+    collector.onQueryTerminated(SimpleNamespace(id="never-seen", exception=None))
+    collector.onQueryTerminated(SimpleNamespace(id="also-unseen", exception="boom"))
+    assert collector.summaries() == []
+
+
 @pytest.fixture
 def mock_registry():
     """Minimal Schema Registry REST mock."""
