@@ -149,13 +149,14 @@ class SQLPipelineExecutor:
         return base.select(*cols)
 
     def _kafka_wire_source(self, spec: ddl_mod.TableSpec) -> DataFrame:
-        """Batch materialization of a Kafka topic over the pure-Python
-        wire client: Metadata for the partition list, Fetch v4 each
+        """Batch materialization of a Kafka topic over the Python wire
+        client: Metadata for the partition list, Fetch v4 each
         partition to its high watermark, then `decode_local` — the
         Avro codec runs on the driver, which already holds every
-        fetched byte, and the decoded rows reach Spark in one Arrow
-        `createDataFrame`. Demo/validation scale; bulk ingestion is the
-        JVM connector, whose fallback codec runs distributed."""
+        fetched byte, decoding a column at a time straight into a
+        `pyarrow.Table` that reaches Spark in one `createDataFrame`.
+        Demo/validation scale; bulk ingestion is the JVM connector,
+        whose fallback codec runs distributed."""
         from pyspark.sql.types import _parse_datatype_string
 
         from pipegen_spark.schema.avsc import struct_to_avro
@@ -273,8 +274,9 @@ class SQLPipelineExecutor:
 
     def _kafka_wire_sink(self, df: DataFrame, spec: ddl_mod.TableSpec) -> int:
         """Batch kafka sink over the wire client: rows → Confluent-wire
-        Avro `value` bytes by `encode_local` (one Arrow `toPandas()`,
-        then the Avro codec on the driver that produces the bytes),
+        Avro `value` bytes by `encode_local` (one `toArrow()`, then the
+        Avro codec over the Arrow columns on the driver that produces
+        the bytes),
         produced to the topic as magic-2 RecordBatches. The schema is
         derived from the result's Spark schema; when a registry answers
         it is registered under `<topic>-value` and the returned id goes

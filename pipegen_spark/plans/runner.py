@@ -280,10 +280,11 @@ class PipelineRunner:
         self, res, schemas, wire: tuple[str, int], schema_id: int
     ) -> dict:
         """Step 8 over the socket: message_rate x duration synthetic
-        rows from the input AVRO schema (generator B6), encoded as
-        Confluent-wire Avro (header + AvroCodec body — the bytes a real
-        Schema-Registry-aware consumer expects), produced to the input
-        topic as magic-2 RecordBatches in rate-paced ticks (B7's
+        rows from the input AVRO schema (generator B6), encoded on the
+        driver as Confluent-wire Avro by `encode_local` (header + Avro
+        body, a column at a time from one `toArrow()` — the bytes a
+        real Schema-Registry-aware consumer expects), produced to the
+        input topic as magic-2 RecordBatches in rate-paced ticks (B7's
         rate-control shape on the wire path)."""
         import time as _time
 

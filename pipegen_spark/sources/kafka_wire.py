@@ -2,7 +2,8 @@
 
 The produce/consume surface speaks Produce v3 and Fetch v4, which carry
 magic-2 RecordBatches: zigzag-varint record fields, record headers and
-a batch-level CRC32C (`encode_record_batch` / `decode_record_batches`).
+a batch-level CRC32C (`encode_record_batch` / `decode_record_batches`,
+which encode and decode a field of every record at a time in numpy).
 Every codec of the batch attributes encodes and decodes: gzip through
 `zlib`, snappy, lz4 and zstd through pyarrow's bundled libraries
 (snappy in the xerial envelope the Java client writes; raw blocks
@@ -89,7 +90,7 @@ class _Reader:
         self.pos = 0
 
     def take(self, n: int) -> bytes:
-        if self.pos + n > len(self.data):
+        if n < 0 or self.pos + n > len(self.data):
             raise ValueError("truncated kafka frame")
         out = self.data[self.pos : self.pos + n]
         self.pos += n
@@ -300,6 +301,8 @@ def _dec_varint(r: _Reader) -> int:
     u = 0
     for shift in range(0, 70, 7):
         b = r.take(1)[0]
+        if shift == 63 and b > 1:
+            raise ValueError("varint past 64 bits")
         u |= (b & 0x7F) << shift
         if not b & 0x80:
             return _unzigzag(u)
@@ -319,24 +322,279 @@ def _dec_varbytes(r: _Reader) -> bytes | None:
     return r.take(n)
 
 
-def encode_record(
-    offset_delta: int,
-    timestamp_delta: int,
-    key: bytes | None,
-    value: bytes | None,
-    headers: tuple[tuple[str, bytes | None], ...] = (),
-) -> bytes:
-    body = (
-        b"\x00"  # record attributes: unused, always 0
-        + _enc_varint(timestamp_delta)
-        + _enc_varint(offset_delta)
-        + _enc_varbytes(key)
-        + _enc_varbytes(value)
-        + _enc_varint(len(headers))
+# --- columnar varints and rows ------------------------------------------------
+#
+# Record fields, and the fields of a flat Avro record
+# (schema/avro_codec.py `ColumnPlan`), are zigzag varints and
+# length-prefixed byte strings. These helpers encode and decode one
+# field of n rows at once as numpy arrays.
+
+_VARINT_MAX = 10
+_VARINT_COLS = np.arange(_VARINT_MAX)
+_VARINT_SHIFTS = np.arange(0, 7 * _VARINT_MAX, 7, dtype=np.uint64)
+#: The smallest zigzagged value of each varint length past one byte.
+_VARINT_LIMITS = np.uint64(1) << _VARINT_SHIFTS[1:]
+#: Zero bytes a buffer read by `decode_varints` carries past its data.
+VARINT_PAD = _VARINT_MAX
+
+
+def encode_varints(values) -> tuple[np.ndarray, np.ndarray]:
+    """Zigzag varints of int64 `values`: an (n, w) uint8 matrix whose
+    row i holds value i's varint in its first lens[i] bytes, w the
+    longest of them, and lens."""
+    v = np.asarray(values, dtype=np.int64)
+    u = ((v << 1) ^ (v >> 63)).view(np.uint64)
+    lens = 1 + np.searchsorted(_VARINT_LIMITS, u, "right")
+    width = int(lens.max()) if len(lens) else 1
+    mat = ((u[:, None] >> _VARINT_SHIFTS[:width]) & 0x7F).astype(np.uint8)
+    mat |= (_VARINT_COLS[:width] < (lens - 1)[:, None]).view(np.uint8) << 7
+    return mat, lens
+
+
+def decode_varints(
+    buf: np.ndarray, pos: np.ndarray, end: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """The zigzag varints at positions `pos` of the uint8 array `buf`,
+    each of which must end by `end`: -> (int64 values, byte lengths).
+    Reads byte k of every varint still open, so a column of short
+    varints costs one or two passes. `buf` carries `VARINT_PAD` zero
+    bytes past its data, so no read leaves it. ValueError on a varint
+    over 10 bytes, past 64 bits or past its end."""
+    u = np.zeros(len(pos), dtype=np.uint64)
+    lens = np.zeros(len(pos), dtype=np.int64)
+    open_ = np.arange(len(pos))
+    for k in range(_VARINT_MAX):
+        b = buf[pos[open_] + k]
+        u[open_] |= (b & 0x7F).astype(np.uint64) << _VARINT_SHIFTS[k]
+        done = b < 0x80
+        lens[open_[done]] = k + 1
+        open_ = open_[~done]
+        if not len(open_):
+            break
+    else:
+        raise ValueError("varint longer than 10 bytes")
+    if k == _VARINT_MAX - 1 and (b > 1).any():
+        raise ValueError("varint past 64 bits")
+    if (lens > end - pos).any():
+        raise ValueError("truncated: a varint runs past its record")
+    return (u >> 1).view(np.int64) ^ -(u & 1).view(np.int64), lens
+
+
+def segment_index(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Positions of every byte of the segments [starts, starts + lens),
+    laid end to end (int32 when they fit: half the memory traffic)."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if len(ends) else 0
+    wide = total and int((starts + lens).max()) >= 1 << 31
+    dtype = np.int64 if wide else np.int32
+    return np.repeat((starts - (ends - lens)).astype(dtype), lens) + np.arange(
+        total, dtype=dtype
     )
-    for hk, hv in headers:
-        body += _enc_varbytes(hk.encode()) + _enc_varbytes(hv)
-    return _enc_varint(len(body)) + body
+
+
+def concat_rows(parts: list[tuple], n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Lay out n rows end to end, row i the concatenation of every
+    part's i-th piece in order. A part is `(matrix, lens)`, piece i
+    `matrix[i, :lens[i]]`, or `(data, starts, lens)`, piece i
+    `data[starts[i]:starts[i] + lens[i]]`.
+    -> (uint8 buffer, n + 1 row offsets)."""
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(sum(part[-1] for part in parts), out=offsets[1:])
+    out = np.empty(int(offsets[-1]), dtype=np.uint8)
+    cursor = offsets[:-1].copy()
+    for part in parts:
+        lens = part[-1]
+        if len(part) == 2:
+            mat = part[0]
+            dst = cursor[:, None] + np.arange(mat.shape[1])
+            if (lens == mat.shape[1]).all():
+                out[dst] = mat
+            else:
+                keep = dst < (cursor + lens)[:, None]
+                out[dst[keep]] = mat[keep]
+        elif len(lens):
+            data, starts = part[0], part[1]
+            if (starts[1:] == starts[:-1] + lens[:-1]).all():
+                src = data[starts[0] : starts[-1] + lens[-1]]  # one run
+            else:
+                src = data[segment_index(starts, lens)]
+            out[segment_index(cursor, lens)] = src
+        cursor += lens
+    return out, offsets
+
+
+def _const_part(byte: int, n: int) -> tuple[np.ndarray, np.ndarray]:
+    return np.full((n, 1), byte, dtype=np.uint8), np.ones(n, dtype=np.int64)
+
+
+def _varbytes_parts(items: list) -> list[tuple]:
+    """Nullable byte strings as a length-varint part (-1 for None) and a
+    data part."""
+    n = len(items)
+    if items.count(None) == n:  # every length is varint(-1), 0x01
+        zeros = np.zeros(n, dtype=np.int64)
+        return [_const_part(1, n), (np.empty(0, np.uint8), zeros, zeros)]
+    if None in items:
+        lens = np.fromiter(
+            (-1 if b is None else len(b) for b in items), np.int64, n
+        )
+    else:
+        lens = np.fromiter(map(len, items), np.int64, n)
+    sizes = np.maximum(lens, 0)
+    data = np.frombuffer(b"".join([b for b in items if b]), dtype=np.uint8)
+    return [encode_varints(lens), (data, np.cumsum(sizes) - sizes, sizes)]
+
+
+def _headers_part(headers: list, n: int) -> tuple:
+    """Per-record header blobs (count varint + pairs): b"\\x00" for a
+    record without headers, encoded in Python only for those with."""
+    if not any(headers):
+        return _const_part(0, n)
+    blobs = [
+        _enc_varint(len(hs))
+        + b"".join(_enc_varbytes(k.encode()) + _enc_varbytes(v) for k, v in hs)
+        if hs
+        else b"\x00"
+        for hs in headers
+    ]
+    sizes = np.fromiter(map(len, blobs), dtype=np.int64, count=n)
+    data = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    return data, np.cumsum(sizes) - sizes, sizes
+
+
+def _encode_records(
+    records: list[tuple], base_timestamp: int
+) -> tuple[bytes, np.ndarray, np.ndarray]:
+    """The records section of a batch, a column at a time.
+    -> (section, n + 1 record offsets into it, timestamps)."""
+    n = len(records)
+    try:
+        ts = np.array([r[2] for r in records], dtype=np.int64)
+    except IndexError:  # some records carry no timestamp
+        ts = np.array(
+            [r[2] if len(r) > 2 else base_timestamp for r in records],
+            dtype=np.int64,
+        )
+    body = [
+        _const_part(0, n),  # record attributes: unused, always 0
+        encode_varints(ts - base_timestamp),
+        encode_varints(np.arange(n)),  # offset delta
+        *_varbytes_parts([r[0] for r in records]),
+        *_varbytes_parts([r[1] for r in records]),
+        _headers_part([r[3] if len(r) > 3 else () for r in records], n),
+    ]
+    buf, offsets = concat_rows(
+        [encode_varints(sum(part[-1] for part in body)), *body], n
+    )
+    return buf.tobytes(), offsets, ts
+
+
+def _record_spans(
+    section: bytes, buf: np.ndarray, count: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(start, end) of each record's body after its length varint. The
+    one sequential scan, since each record starts where the one before
+    it ends: it only hops from length to length; the lengths are then
+    read again, and checked, as a column."""
+    heads = []
+    mark = heads.append
+    pos = 0
+    try:
+        for _ in range(count):
+            mark(pos)
+            b = section[pos]
+            pos += 1
+            u, shift = b & 0x7F, 0
+            while b >= 0x80:
+                shift += 7
+                if shift == 70:
+                    raise ValueError("varint longer than 10 bytes")
+                b = section[pos]
+                pos += 1
+                u |= (b & 0x7F) << shift
+            if u & 1:
+                raise ValueError(f"negative record length {_unzigzag(u)}")
+            pos += u >> 1
+    except IndexError:
+        raise ValueError("truncated kafka frame") from None
+    if pos > len(section):
+        raise ValueError("truncated kafka frame")
+    heads = np.array(heads, dtype=np.int64)
+    ends = np.empty_like(heads)
+    ends[:-1] = heads[1:]
+    ends[-1:] = pos
+    lengths, width = decode_varints(buf, heads, ends)
+    return heads + width, heads + width + lengths
+
+
+def _read_varbytes(
+    section: bytes, buf: np.ndarray, pos: np.ndarray, end: np.ndarray
+) -> tuple[list, np.ndarray]:
+    """A nullable byte-string field of every record (negative length =
+    None). -> (values, positions after them)."""
+    lens, width = decode_varints(buf, pos, end)
+    pos = pos + width
+    sizes = np.maximum(lens, 0)
+    if (sizes > end - pos).any():
+        raise ValueError("truncated kafka frame")
+    if (lens < 0).all():
+        items = [None] * len(lens)
+    else:
+        items = [
+            section[p : p + k] if k >= 0 else None
+            for p, k in zip(pos.tolist(), lens.tolist())
+        ]
+    return items, pos + sizes
+
+
+def _decode_records(
+    section: bytes, count: int, base_offset: int, base_ts: int
+) -> list[tuple[int, int, bytes | None, bytes | None, tuple]]:
+    """Every record of one batch's records section, a field at a time;
+    each read is checked against its record's declared length."""
+    buf = np.frombuffer(section + bytes(VARINT_PAD), dtype=np.uint8)
+    starts, ends = _record_spans(section, buf, count)
+    if (starts >= ends).any():
+        raise ValueError("truncated kafka frame")
+    pos = starts + 1  # record attributes
+    ts_delta, width = decode_varints(buf, pos, ends)
+    pos += width
+    off_delta, width = decode_varints(buf, pos, ends)
+    pos += width
+    keys, pos = _read_varbytes(section, buf, pos, ends)
+    values, pos = _read_varbytes(section, buf, pos, ends)
+    n_headers, width = decode_varints(buf, pos, ends)
+    pos += width
+    if (n_headers < 0).any():
+        raise ValueError("negative header count")
+    headers: list[tuple] = [()] * count
+    for i in np.flatnonzero(n_headers).tolist():
+        rec = _Reader(section[pos[i] : ends[i]])
+        pairs = []
+        for _ in range(int(n_headers[i])):
+            hk = _dec_varbytes(rec)
+            if hk is None:
+                raise ValueError("null header key")
+            pairs.append((hk.decode(), _dec_varbytes(rec)))
+        headers[i] = tuple(pairs)
+    return list(
+        zip(
+            _offset(base_offset, off_delta),
+            _offset(base_ts, ts_delta),
+            keys,
+            values,
+            headers,
+        )
+    )
+
+
+def _offset(base: int, deltas: np.ndarray) -> list[int]:
+    """base + deltas as Python ints, exact even where int64 would
+    overflow."""
+    out = deltas + base
+    if (out >= deltas).all() if base >= 0 else (out <= deltas).all():
+        return out.tolist()
+    return [base + d for d in deltas.tolist()]
 
 
 #: attributes bits 0-2: the batch compression codec (protocol guide).
@@ -451,6 +709,42 @@ def _decompress(codec: int, section: bytes) -> bytes:
         raise ValueError(f"bad {name} records section: {e}") from e
 
 
+#: Bytes of a RecordBatch before its records: baseOffset, batchLength,
+#: partitionLeaderEpoch, magic, crc, attributes, lastOffsetDelta,
+#: base/max timestamps, producer id/epoch, baseSequence, recordCount.
+BATCH_OVERHEAD = 61
+
+
+def _frame_batch(
+    section: bytes,
+    count: int,
+    base_offset: int,
+    base_timestamp: int,
+    max_timestamp: int,
+    producer_id: int,
+    producer_epoch: int,
+    base_sequence: int,
+    compression: int,
+) -> bytes:
+    """Wrap an uncompressed records section of `count` records in the
+    batch header, compressing it first under `compression`."""
+    if compression != COMPRESSION_NONE:
+        section = _compress(compression, section)
+    after_crc = (
+        # attributes bits 0-2 carry the codec; lastOffsetDelta
+        struct.pack(">hi", compression, count - 1)
+        + struct.pack(">qq", base_timestamp, max_timestamp)
+        + struct.pack(">qhi", producer_id, producer_epoch, base_sequence)
+        + struct.pack(">i", count)
+        + section
+    )
+    crc = crc32c(after_crc)
+    # batchLength counts every byte after its own field:
+    # partitionLeaderEpoch(4) + magic(1) + crc(4) + after_crc
+    inner = struct.pack(">ibI", -1, 2, crc) + after_crc
+    return struct.pack(">qi", base_offset, len(inner)) + inner
+
+
 def encode_record_batch(
     records: list[tuple],
     base_offset: int = 0,
@@ -469,30 +763,18 @@ def encode_record_batch(
         raise ValueError("a RecordBatch must contain at least one record")
     if compression not in (COMPRESSION_NONE, *_COMPRESSION_NAMES):
         raise ValueError(f"unsupported compression codec {compression}")
-    recs = bytearray()
-    max_ts = base_timestamp
-    for i, rec in enumerate(records):
-        key, value = rec[0], rec[1]
-        ts = rec[2] if len(rec) > 2 else base_timestamp
-        headers = tuple(rec[3]) if len(rec) > 3 else ()
-        max_ts = max(max_ts, ts)
-        recs += encode_record(i, ts - base_timestamp, key, value, headers)
-    body = bytes(recs)
-    if compression != COMPRESSION_NONE:
-        body = _compress(compression, body)
-    after_crc = (
-        # attributes bits 0-2 carry the codec; lastOffsetDelta
-        struct.pack(">hi", compression, len(records) - 1)
-        + struct.pack(">qq", base_timestamp, max_ts)
-        + struct.pack(">qhi", producer_id, producer_epoch, base_sequence)
-        + struct.pack(">i", len(records))
-        + body
+    section, _, ts = _encode_records(records, base_timestamp)
+    return _frame_batch(
+        section,
+        len(records),
+        base_offset,
+        base_timestamp,
+        max(base_timestamp, int(ts.max())),
+        producer_id,
+        producer_epoch,
+        base_sequence,
+        compression,
     )
-    crc = crc32c(after_crc)
-    # batchLength counts every byte after its own field:
-    # partitionLeaderEpoch(4) + magic(1) + crc(4) + after_crc
-    inner = struct.pack(">ibI", -1, 2, crc) + after_crc
-    return struct.pack(">qi", base_offset, len(inner)) + inner
 
 
 def decode_record_batches(
@@ -531,37 +813,14 @@ def decode_record_batches(
         if count < 0:
             raise ValueError(f"negative record count {count}")
         codec = attributes & 0x07
+        section = batch.data[batch.pos :]
         if codec in _COMPRESSION_NAMES:
-            batch = _Reader(_decompress(codec, batch.data[batch.pos :]))
+            section = _decompress(codec, section)
         elif codec != COMPRESSION_NONE:
             # A silent mis-parse of a compressed batch would hand the
             # varint reader compressed bytes — fail with the codec value.
             raise ValueError(f"unsupported compression codec {codec}")
-        for _ in range(count):
-            rec = _Reader(batch.take(_dec_varint(batch)))
-            rec.i8()  # record attributes
-            ts_delta = _dec_varint(rec)
-            off_delta = _dec_varint(rec)
-            key = _dec_varbytes(rec)
-            value = _dec_varbytes(rec)
-            n_headers = _dec_varint(rec)
-            if n_headers < 0:
-                raise ValueError("negative header count")
-            headers = []
-            for _ in range(n_headers):
-                hk = _dec_varbytes(rec)
-                if hk is None:
-                    raise ValueError("null header key")
-                headers.append((hk.decode(), _dec_varbytes(rec)))
-            out.append(
-                (
-                    base_offset + off_delta,
-                    base_ts + ts_delta,
-                    key,
-                    value,
-                    tuple(headers),
-                )
-            )
+        out.extend(_decode_records(section, count, base_offset, base_ts))
     return out
 
 
@@ -1052,38 +1311,36 @@ class _Log:
 
     def read_v2(self, offset: int, max_bytes: int | None = None) -> bytes:
         """Re-frame the log tail from `offset` as one RecordBatch. When
-        `max_bytes` is given, encode only as many WHOLE records as fit —
-        but always at least one (KIP-74: a fetch must return the first
-        batch complete even when it exceeds max_bytes, else a client
-        with a small fetch size can never make progress). Byte-slicing
-        a single re-framed batch would hand the client a partial batch
-        that decode_record_batches silently drops."""
+        `max_bytes` is given, frame only the longest prefix of WHOLE
+        records that fits — but always at least one (KIP-74: a fetch
+        must return the first batch complete even when it exceeds
+        max_bytes, else a client with a small fetch size can never make
+        progress). Byte-slicing a single re-framed batch would hand the
+        client a partial batch that decode_record_batches silently
+        drops. Record sizes do not depend on how many records follow,
+        so one encode of the tail prices every prefix."""
         if offset < 0 or offset > len(self.records):
             raise IndexError
         tail = self.records[offset:]
         if not tail:
             return b""
         base_ts = tail[0][2]
-
-        def _encode(n: int) -> bytes:
-            return encode_record_batch(
-                [(k, v, ts, hs) for k, v, ts, hs in tail[:n]],
-                base_offset=offset,
-                base_timestamp=base_ts,
-            )
-
-        batch = _encode(len(tail))
-        if max_bytes is None or len(batch) <= max_bytes:
-            return batch
-        # Shrink the record count until the whole batch fits; floor 1.
+        section, ends, ts = _encode_records(tail, base_ts)
         n = len(tail)
-        while n > 1:
-            n = max(1, n * max_bytes // len(batch))
-            batch = _encode(n)
-            if len(batch) <= max_bytes:
-                return batch
-            n -= 1
-        return _encode(1)
+        if max_bytes is not None and BATCH_OVERHEAD + len(section) > max_bytes:
+            fit = np.searchsorted(ends[1:], max_bytes - BATCH_OVERHEAD, "right")
+            n = max(1, int(fit))
+        return _frame_batch(
+            section[: ends[n]],
+            n,
+            offset,
+            base_ts,
+            max(base_ts, int(ts[:n].max())),
+            -1,
+            -1,
+            -1,
+            COMPRESSION_NONE,
+        )
 
 
 class FakeKafkaBroker:

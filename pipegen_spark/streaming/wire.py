@@ -1,29 +1,28 @@
 """Confluent Schema Registry wire format: magic 0x00 + 4-byte big-endian
 schema id + Avro binary (internal/pipeline/producer.go:424-447).
 
-The body codec is the pure-Python Avro codec (schema/avro_codec.py),
-the role goavro plays for the reference's producer, applied to pandas
-frames by `encode_frame` / `decode_frame`. Where it runs depends on
-where the bytes are:
+The body codec is schema/avro_codec.py, the role goavro plays for the
+reference's producer, applied to Arrow data by `encode_table` /
+`decode_table`: a flat record schema runs as a compiled column plan
+(numpy over whole Arrow columns), any other row by row through
+`AvroCodec`. Where it runs depends on where the bytes are:
 
 - Wire-broker mode (`encode_local` / `decode_local`): the bytes are
   produced from and fetched to the driver, so the codec runs there,
-  behind one Arrow hop to or from Spark — no Python worker job.
+  behind one Arrow hop to or from Spark (`toArrow()` /
+  `createDataFrame` of a `pyarrow.Table`) — no Python worker job.
 - JVM Kafka connector and streaming (`encode_confluent_avro` /
   `decode_confluent_avro`): JVM spark-avro `to_avro`/`from_avro` when
   the jar is on the classpath, else the same codec distributed over
-  Arrow-batched `mapInPandas` (codec built once per task).
+  `mapInArrow`, one call per Arrow batch.
 """
 
 from __future__ import annotations
-
-import datetime as _dt
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MAGIC = b"\x00"
-_EPOCH = _dt.date(1970, 1, 1)
 
 
 def wire_header(schema_id: int) -> bytes:
@@ -79,93 +78,31 @@ def have_avro_jar(spark) -> bool:
     return _AVRO_JAR_STATE[key]
 
 
-def _to_avro_native(v):
-    """One pandas cell → Avro-native value for the pure-Python codec."""
-    import pandas as pd
-
-    if v is None or v is pd.NaT or (isinstance(v, float) and v != v):
-        return None
-    if isinstance(v, pd.Timestamp):
-        return v.value // 1_000  # ns → logical timestamp-micros long
-    if isinstance(v, _dt.datetime):
-        return int(v.timestamp() * 1_000_000)
-    if isinstance(v, _dt.date):
-        return (v - _EPOCH).days  # logical date int
-    if hasattr(v, "item"):  # numpy scalar
-        return v.item()
-    if isinstance(v, bytearray):
-        return bytes(v)
-    return v
-
-
-def _integral_fields(record_schema: dict) -> set[str]:
-    """Fields whose (non-null) Avro type is int or long. pandas widens
-    such a column to float64 when it holds a null, so the encoder turns
-    the column's floats back into ints."""
-    out = set()
-    for f in record_schema.get("fields", []):
-        t = f["type"]
-        if isinstance(t, list):
-            branches = [b for b in t if b != "null"]
-            t = branches[0] if len(branches) == 1 else None
-        if isinstance(t, dict):
-            t = t.get("type")
-        if t in ("int", "long"):
-            out.add(f["name"])
-    return out
-
-
-def encode_frame(pdf, codec, header: bytes, cols: list[str]) -> list[bytes]:
-    """pandas rows → Confluent-wire frames (header + AvroCodec body)."""
-    ints = _integral_fields(codec.schema)
-    integral = [c in ints for c in cols]
-    out = []
-    for row in pdf[cols].itertuples(index=False, name=None):
-        rec = {}
-        for c, is_int, v in zip(cols, integral, row):
-            v = _to_avro_native(v)
-            rec[c] = int(v) if is_int and isinstance(v, float) else v
-        out.append(header + codec.encode(rec))
-    return out
-
-
-def decode_frame(values, codec, st):
-    """Confluent-wire frames → pandas frame with the columns of `st`
-    (timestamps as datetime64, dates as datetime.date)."""
-    import pandas as pd
-    from pyspark.sql.types import DateType, TimestampType
-
-    names = [f.name for f in st.fields]
-    recs = [codec.decode(v, 5) for v in values]
-    out = pd.DataFrame.from_records(recs, columns=names)
-    for f in st.fields:
-        if isinstance(f.dataType, TimestampType):
-            out[f.name] = pd.to_datetime(out[f.name], unit="us")
-        elif isinstance(f.dataType, DateType):
-            out[f.name] = out[f.name].map(
-                lambda d: _EPOCH + _dt.timedelta(days=int(d))
-                if pd.notna(d)
-                else None
-            )
-    return out
-
-
 def encode_local(
     df: DataFrame, schema_json: str, schema_id: int, cols: list[str]
 ) -> list[bytes]:
-    """Driver-side wire encode: one Arrow `toPandas()`, then the codec."""
-    from pipegen_spark.schema.avro_codec import AvroCodec
+    """Driver-side wire encode: one `toArrow()`, then the codec over
+    the Arrow columns."""
+    from pipegen_spark.schema.avro_codec import encode_table, frames_to_bytes
 
-    pdf = df.select(*cols).toPandas()
-    return encode_frame(pdf, AvroCodec(schema_json), wire_header(schema_id), cols)
+    frames = encode_table(
+        df.select(*cols).toArrow(), schema_json, wire_header(schema_id)
+    )
+    return frames_to_bytes(frames)
 
 
 def decode_local(spark, values: list[bytes], avro_json: str, st) -> DataFrame:
-    """Driver-side wire decode: the codec, then one Arrow
-    `createDataFrame` of the decoded frame."""
-    from pipegen_spark.schema.avro_codec import AvroCodec
+    """Driver-side wire decode: the codec straight into an Arrow table,
+    then one `createDataFrame` of it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    return spark.createDataFrame(decode_frame(values, AvroCodec(avro_json), st), st)
+    from pipegen_spark.schema.avro_codec import decode_table
+
+    table = decode_table(
+        pa.array(values, pa.binary()), avro_json, to_arrow_schema(st), skip=5
+    )
+    return spark.createDataFrame(table, st)
 
 
 def encode_confluent_avro(
@@ -173,8 +110,8 @@ def encode_confluent_avro(
 ) -> DataFrame:
     """struct(cols) → wire-format `value` column.
 
-    JVM to_avro when spark-avro is present; otherwise the pure-Python
-    codec over mapInPandas (distributed, Arrow-batched)."""
+    JVM to_avro when spark-avro is present; otherwise the Python codec
+    over mapInArrow (distributed, Arrow-batched)."""
     if have_avro_jar(df.sparkSession):
         from pyspark.sql.avro.functions import to_avro
 
@@ -188,25 +125,25 @@ def encode_confluent_avro(
 def encode_confluent_avro_py(
     df: DataFrame, avro_schema_json: str, schema_id: int, cols: list[str]
 ) -> DataFrame:
-    """Pure-Python wire encode (no jar): encode_frame per Arrow batch."""
+    """Python wire encode (no jar): the codec per Arrow batch."""
     header = wire_header(schema_id)
 
     def _encode(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        from pipegen_spark.schema.avro_codec import AvroCodec
+        from pipegen_spark.schema.avro_codec import encode_table
 
-        codec = AvroCodec(avro_schema_json)
-        for pdf in batches:
-            yield pd.DataFrame({"value": encode_frame(pdf, codec, header, cols)})
+        for batch in batches:
+            frames = encode_table(batch, avro_schema_json, header)
+            yield pa.RecordBatch.from_arrays([frames], ["value"])
 
-    return df.select(*cols).mapInPandas(_encode, "value binary")
+    return df.select(*cols).mapInArrow(_encode, "value binary")
 
 
 def decode_confluent_avro(df: DataFrame, spec) -> DataFrame:
     """Kafka `value` → typed columns using the TableSpec's schema.
 
-    JVM from_avro when spark-avro is present; otherwise the pure-Python
+    JVM from_avro when spark-avro is present; otherwise the Python
     codec. For JSON-format topics use decode_json instead."""
     from pipegen_spark.schema.avsc import struct_to_avro
     from pyspark.sql.types import _parse_datatype_string
@@ -224,16 +161,20 @@ def decode_confluent_avro(df: DataFrame, spec) -> DataFrame:
 
 
 def decode_confluent_avro_py(df: DataFrame, avro_json: str, st) -> DataFrame:
-    """Pure-Python wire decode (no jar): decode_frame per Arrow batch."""
+    """Python wire decode (no jar): the codec per Arrow batch."""
 
     def _decode(batches):
-        from pipegen_spark.schema.avro_codec import AvroCodec
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        codec = AvroCodec(avro_json)
-        for pdf in batches:
-            yield decode_frame(pdf["value"], codec, st)
+        from pipegen_spark.schema.avro_codec import decode_table
 
-    return df.select("value").mapInPandas(_decode, st)
+        target = to_arrow_schema(st)
+        for batch in batches:
+            yield from decode_table(
+                batch.column(0), avro_json, target, skip=5
+            ).to_batches()
+
+    return df.select("value").mapInArrow(_decode, st)
 
 
 def decode_json(df: DataFrame, schema_ddl: str) -> DataFrame:

@@ -241,3 +241,258 @@ def test_wire_local_codec_matches_mapinpandas_path(spark):
     assert back_local.schema == back_dist.schema == df.schema
     assert back_local.collect() == back_dist.collect()
     assert [tuple(r) for r in back_local.collect()] == rows
+
+
+# --- column plan against the AvroCodec oracle -------------------------------
+
+_KINDS = {
+    "boolean": "boolean",
+    "int": "int",
+    "long": "long",
+    "float": "float",
+    "double": "double",
+    "bytes": "bytes",
+    "string": "string",
+    "date": {"type": "int", "logicalType": "date"},
+    "timestamp-micros": {"type": "long", "logicalType": "timestamp-micros"},
+}
+
+
+def _boundaries(bits: int) -> list[int]:
+    """0, ±2^7k (every varint length step) and the signed range ends."""
+    lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
+    out = {0, lo, hi}
+    for k in range(1, 10):
+        out.update(v for v in (1 << 7 * k, -(1 << 7 * k)) if lo <= v <= hi)
+        out.update(v for v in ((1 << 7 * k) - 1, -(1 << 7 * k) + 1) if lo <= v <= hi)
+    return sorted(out)
+
+
+def _int_values(bits: int):
+    lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
+    return st.one_of(
+        st.sampled_from(_boundaries(bits)), st.integers(min_value=lo, max_value=hi)
+    )
+
+
+_VALUES = {
+    "boolean": st.booleans(),
+    "int": _int_values(32),
+    "long": _int_values(64),
+    "float": st.floats(width=32, allow_nan=False),
+    "double": st.floats(allow_nan=False),
+    "bytes": st.binary(max_size=20),
+    "string": st.one_of(st.just(""), st.text(max_size=12)),
+    # days and micros since the epoch, 1970 and before included
+    "date": _int_values(32),
+    "timestamp-micros": _int_values(64),
+}
+
+
+@st.composite
+def _flat_records(draw, min_nullable: int = 0):
+    """(schema, rows): a random flat record schema of plan kinds, each
+    field nullable or not, and rows of Avro-native values for it."""
+    kinds = draw(st.lists(st.sampled_from(sorted(_KINDS)), min_size=1, max_size=6))
+    nullable = draw(st.lists(st.booleans(), min_size=len(kinds), max_size=len(kinds)))
+    nullable[:min_nullable] = [True] * min_nullable
+    fields = [
+        {"name": f"f{i}", "type": ["null", _KINDS[k]] if n else _KINDS[k]}
+        for i, (k, n) in enumerate(zip(kinds, nullable))
+    ]
+    rows = draw(
+        st.lists(
+            st.fixed_dictionaries(
+                {
+                    f["name"]: st.one_of(st.none(), _VALUES[k]) if n else _VALUES[k]
+                    for f, k, n in zip(fields, kinds, nullable)
+                }
+            ),
+            min_size=1,
+            max_size=8,
+        )
+    )
+    return {"type": "record", "name": "Flat", "fields": fields}, rows
+
+
+def _arrow_table(plan, rows):
+    """The rows as Arrow columns of the plan's decoded types (dates and
+    timestamps built from their day and microsecond counts)."""
+    import pyarrow as pa
+
+    from pipegen_spark.schema.avro_codec import _ARROW_TYPES
+
+    cols = {}
+    for name, kind, _ in plan.fields:
+        typ = _ARROW_TYPES[kind]
+        values = [r[name] for r in rows]
+        if kind == "date":
+            cols[name] = pa.array(values, pa.int32()).cast(typ)
+        elif kind == "timestamp-micros":
+            cols[name] = pa.array(values, pa.int64()).cast(typ)
+        else:
+            cols[name] = pa.array(values, typ)
+    return pa.table(cols)
+
+
+def _native_rows(table) -> list[dict]:
+    """Decoded Arrow columns back to Avro-native values (dates and
+    timestamps as their integer counts)."""
+    import pyarrow as pa
+
+    cols = {}
+    for name in table.column_names:
+        col = table.column(name)
+        if pa.types.is_date32(col.type):
+            col = col.cast(pa.int32())
+        elif pa.types.is_timestamp(col.type):
+            col = col.cast(pa.int64())
+        cols[name] = col.to_pylist()
+    return [dict(zip(cols, vals)) for vals in zip(*cols.values())]
+
+
+@settings(max_examples=300, deadline=None)
+@given(_flat_records())
+def test_column_plan_matches_avro_codec(schema_rows):
+    """Random flat schemas at the varint boundaries: the column plan
+    writes AvroCodec's bytes and reads them back to AvroCodec's values."""
+    from pipegen_spark.schema.avro_codec import ColumnPlan
+
+    schema, rows = schema_rows
+    plan = ColumnPlan.compile(schema)
+    assert plan is not None
+    codec = AvroCodec(schema)
+    header = b"\x00\x00\x00\x00\x07"
+    frames = plan.encode(_arrow_table(plan, rows), header)
+    assert frames.to_pylist() == [header + codec.encode(r) for r in rows]
+    decoded = _native_rows(plan.decode(frames, skip=5))
+    assert decoded == [codec.decode(f, 5) for f in frames.to_pylist()]
+    assert decoded == rows
+
+
+@settings(max_examples=200, deadline=None)
+@given(_flat_records(), st.data())
+def test_column_plan_truncation_raises_like_avro_codec(schema_rows, data):
+    """A frame cut short raises AvroCodecError on both codecs; the plan
+    raises even when a valid frame follows, instead of reading on into
+    that frame's bytes."""
+    import pyarrow as pa
+
+    from pipegen_spark.schema.avro_codec import ColumnPlan
+
+    schema, rows = schema_rows
+    plan = ColumnPlan.compile(schema)
+    codec = AvroCodec(schema)
+    body = codec.encode(rows[0])
+    cut = body[: data.draw(st.integers(0, len(body) - 1))]
+    with pytest.raises(AvroCodecError):
+        codec.decode(cut)
+    with pytest.raises(AvroCodecError):
+        plan.decode(pa.array([cut], pa.binary()))
+    with pytest.raises(AvroCodecError):
+        plan.decode(pa.array([cut, body], pa.binary()))
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    _flat_records(min_nullable=1),
+    st.integers(-64, 63).filter(lambda b: b not in (0, 1)),
+)
+def test_column_plan_bad_union_branch_raises_like_avro_codec(schema_rows, branch):
+    """A `["null", T]` branch index other than 0 or 1 raises
+    AvroCodecError on both codecs."""
+    import pyarrow as pa
+
+    from pipegen_spark.schema.avro_codec import ColumnPlan
+
+    schema, rows = schema_rows
+    body = AvroCodec(schema).encode(rows[0])
+    bad = bytes([(branch << 1) ^ (branch >> 63)]) + body[1:]  # one-byte zigzag
+    with pytest.raises(AvroCodecError, match="union branch"):
+        AvroCodec(schema).decode(bad)
+    with pytest.raises(AvroCodecError, match="union branch"):
+        ColumnPlan.compile(schema).decode(pa.array([bad, body], pa.binary()))
+
+
+@pytest.mark.parametrize(
+    "field_type",
+    [
+        {"type": "array", "items": "long"},
+        {"type": "map", "values": "string"},
+        {"type": "enum", "name": "E", "symbols": ["A", "B"]},
+        {"type": "fixed", "name": "F", "size": 2},
+        {"type": "record", "name": "Sub", "fields": [{"name": "x", "type": "int"}]},
+        ["null", "string", "long"],
+        ["string", "null"],
+        {"type": "long", "logicalType": "timestamp-millis"},
+    ],
+)
+def test_column_plan_declines_what_it_does_not_cover(field_type):
+    from pipegen_spark.schema.avro_codec import column_plan
+
+    schema = {
+        "type": "record",
+        "name": "R",
+        "fields": [{"name": "a", "type": "long"}, {"name": "b", "type": field_type}],
+    }
+    assert column_plan(schema) is None
+    assert column_plan(json.dumps(schema)) is None
+
+
+def test_nested_and_array_schemas_fall_back_to_avro_codec():
+    """encode_table / decode_table on a schema the plan declines: the
+    bytes are AvroCodec's (Arrow maps handed over as dicts), and they
+    decode back to the same Arrow columns, a nested timestamp
+    included."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from pipegen_spark.schema.avro_codec import decode_table, encode_table
+
+    schema = {
+        "type": "record",
+        "name": "Doc",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "tags", "type": {"type": "array", "items": "string"}},
+            {"name": "counts", "type": {"type": "map", "values": "long"}},
+            {
+                "name": "sub",
+                "type": {
+                    "type": "record",
+                    "name": "Sub",
+                    "fields": [
+                        {
+                            "name": "at",
+                            "type": {"type": "long", "logicalType": "timestamp-micros"},
+                        }
+                    ],
+                },
+            },
+        ],
+    }
+    utc = dt.timezone.utc
+    table = pa.table(
+        {
+            "id": pa.array([1, -2], pa.int64()),
+            "tags": pa.array([["a", "b"], []], pa.list_(pa.string())),
+            "counts": pa.array(
+                [[("k", 7)], []], pa.map_(pa.string(), pa.int64())
+            ),
+            "sub": pa.array(
+                [{"at": dt.datetime(1969, 7, 20, tzinfo=utc)},
+                 {"at": dt.datetime(2024, 2, 29, 12, tzinfo=utc)}],
+                pa.struct([("at", pa.timestamp("us", tz="UTC"))]),
+            ),
+        }
+    )
+    frames = encode_table(table, schema, b"\x00\x00\x00\x00\x01")
+    codec = AvroCodec(schema)
+    micros = [-14_256_000_000_000, 1_709_208_000_000_000]
+    assert frames.to_pylist() == [
+        b"\x00\x00\x00\x00\x01"
+        + codec.encode({"id": i, "tags": t, "counts": c, "sub": {"at": m}})
+        for i, t, c, m in zip([1, -2], [["a", "b"], []], [{"k": 7}, {}], micros)
+    ]
+    assert decode_table(frames, schema, table.schema, skip=5).equals(table)

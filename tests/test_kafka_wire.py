@@ -28,6 +28,10 @@ from pipegen_spark.sources.kafka_wire import (
     ERR_UNKNOWN_TOPIC_OR_PARTITION,
     FakeKafkaBroker,
     KafkaWireClient,
+    _dec_varbytes,
+    _dec_varint,
+    _decompress,
+    _Reader,
     crc32c,
     decode_record_batches,
     encode_record_batch,
@@ -922,6 +926,93 @@ def test_record_batch_corruption_is_loud_or_typed(recs, codec, reseal, data):
         assert k is None or isinstance(k, bytes)
         assert v is None or isinstance(v, bytes)
         assert isinstance(hs, tuple)
+
+
+def _oracle_decode_record_batches(data: bytes) -> list[tuple]:
+    """The record-at-a-time decoder the columnar one replaced, kept as
+    the oracle: a `_Reader` per record and a varint read per field. Its
+    varint reader, the module's `_dec_varint`, rejects values past 64
+    bits as the columnar reader does."""
+    out = []
+    r = _Reader(data)
+    while len(data) - r.pos >= 12:
+        base_offset = r.i64()
+        batch_len = r.i32()
+        if batch_len < 9 or r.pos + batch_len > len(data):
+            break
+        batch = _Reader(r.take(batch_len))
+        batch.i32()
+        magic = batch.i8()
+        if magic != 2:
+            raise ValueError(f"unsupported batch magic {magic}")
+        crc = struct.unpack(">I", batch.take(4))[0]
+        if crc32c(batch.data[batch.pos :]) != crc:
+            raise ValueError("bad batch CRC32C")
+        attributes = batch.i16()
+        batch.i32()
+        base_ts = batch.i64()
+        batch.i64(), batch.i64(), batch.i16(), batch.i32()
+        count = batch.i32()
+        if count < 0:
+            raise ValueError(f"negative record count {count}")
+        codec = attributes & 0x07
+        if codec:
+            batch = _Reader(_decompress(codec, batch.data[batch.pos :]))
+        for _ in range(count):
+            rec = _Reader(batch.take(_dec_varint(batch)))
+            rec.i8()
+            ts_delta = _dec_varint(rec)
+            off_delta = _dec_varint(rec)
+            key = _dec_varbytes(rec)
+            value = _dec_varbytes(rec)
+            n_headers = _dec_varint(rec)
+            if n_headers < 0:
+                raise ValueError("negative header count")
+            headers = []
+            for _ in range(n_headers):
+                hk = _dec_varbytes(rec)
+                if hk is None:
+                    raise ValueError("null header key")
+                headers.append((hk.decode(), _dec_varbytes(rec)))
+            out.append(
+                (base_offset + off_delta, base_ts + ts_delta, key, value,
+                 tuple(headers))
+            )
+    return out
+
+
+def _decode_or_error(decode, data: bytes):
+    try:
+        return decode(data)
+    except ValueError:
+        return ValueError
+
+
+@given(
+    hst.lists(_record_v2, min_size=1, max_size=6),
+    hst.sampled_from([0, 0, 0, 1, 4]),  # mostly uncompressed records
+    hst.data(),
+)
+@settings(max_examples=300)
+def test_record_batch_corruption_matches_record_oracle(recs, codec, data):
+    """A single-byte flip in the records section, with the CRC32C
+    resealed so the flip reaches the record reader: the columnar
+    decoder raises ValueError exactly when the record-at-a-time oracle
+    does, and otherwise returns the same records."""
+    full = bytearray(
+        encode_record_batch(
+            recs, base_offset=3, base_timestamp=recs[0][2], compression=codec
+        )
+    )
+    assert _oracle_decode_record_batches(bytes(full)) == decode_record_batches(
+        bytes(full)
+    )
+    pos = data.draw(hst.integers(61, len(full) - 1))
+    full[pos] = data.draw(hst.integers(0, 255))
+    full[17:21] = struct.pack(">I", crc32c(bytes(full[21:])))
+    assert _decode_or_error(decode_record_batches, bytes(full)) == (
+        _decode_or_error(_oracle_decode_record_batches, bytes(full))
+    )
 
 
 # --- group membership (r13 follow-through) ------------------------------------------
