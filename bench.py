@@ -160,6 +160,7 @@ def main() -> None:
     # FutureWarnings out of a merged stdout/stderr capture.
     os.environ.setdefault("PYTHONWARNINGS", "ignore")
 
+    from pipegen_spark.operators.spill import spill_scope
     from pipegen_spark.queries.canon import result_sha256
     from pipegen_spark.queries.registry import all_queries
     from pipegen_spark.session import get_spark
@@ -189,12 +190,7 @@ def main() -> None:
     def _drain_gc() -> None:
         # Let ContextCleaner reclaim dead broadcasts/shuffles between
         # passes (see periodicGC note above). Driver-side JVM gc; cheap
-        # relative to a corpus pass. clearCache() first: the SemDeDup
-        # operators persist their assignment frames for the query's
-        # lifetime (operators/embeddings.py — CacheManager entries are
-        # NOT GC-reclaimed), so a long-lived session must drop them at
-        # a pass boundary or they accumulate across the corpus.
-        spark.catalog.clearCache()
+        # relative to a corpus pass.
         spark.sparkContext._jvm.System.gc()
 
     qs = all_queries()
@@ -231,12 +227,16 @@ def main() -> None:
     # before the timed passes (round-7 verdict #7).
     spark_floor = _spark_floor(spark)
 
+    # Each timed pass owns the spills its queries make (one spill_scope
+    # per pass, opened on this thread around the pool): they are deleted
+    # when the pass ends, never while a query can still read them.
     _load("cold_before")
     times: dict[str, float] = {}
-    for name in sorted(qs):
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).collect()
-        times[name] = round(time.perf_counter() - t0, 4)
+    with spill_scope():
+        for name in sorted(qs):
+            t0 = time.perf_counter()
+            qs[name](spark, sf_dir).collect()
+            times[name] = round(time.perf_counter() - t0, 4)
 
     total = round(sum(times.values()), 4)
     _drain_gc()
@@ -249,12 +249,13 @@ def main() -> None:
     _load("warm_before", gate=True)
     warm: dict[str, float] = {}
     hashes: dict[str, str] = {}
-    for name in sorted(qs):
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        rows = df.collect()
-        warm[name] = round(time.perf_counter() - t0, 4)
-        hashes[name] = result_sha256(df.columns, [tuple(r) for r in rows])
+    with spill_scope():
+        for name in sorted(qs):
+            t0 = time.perf_counter()
+            df = qs[name](spark, sf_dir)
+            rows = df.collect()
+            warm[name] = round(time.perf_counter() - t0, 4)
+            hashes[name] = result_sha256(df.columns, [tuple(r) for r in rows])
     warm_total_seq = round(sum(warm.values()), 4)
     _drain_gc()
 
@@ -273,10 +274,11 @@ def main() -> None:
     for run_no in (1, 2):
         _load(f"pooled{run_no}_before", gate=True)
         t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=POOL_THREADS) as pool:
-            list(pool.map(_run, pooled))
-        for name in sequential:
-            _run(name)
+        with spill_scope():
+            with ThreadPoolExecutor(max_workers=POOL_THREADS) as pool:
+                list(pool.map(_run, pooled))
+            for name in sequential:
+                _run(name)
         pooled_runs.append(round(time.perf_counter() - t0, 4))
         _drain_gc()
     warm_total = min(pooled_runs)

@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from pipegen_spark.functions import dialect as dl
 from pipegen_spark.operators import dedup as dd
+from pipegen_spark.operators.spill import spill_to_parquet
 
 # PII-ish redaction patterns. No backslash classes — the same literal
 # pattern string must parse identically in Java regex and DuckDB RE2.
@@ -694,8 +695,6 @@ def dsir_scores(
     # columns) so — unlike the LSH shingle-array spill, rejected at sf1 —
     # the write is cheap at scale. Interleaved A/B, hashes identical:
     # 2.78 -> 2.13 s at sf0.1, 4.56 -> 3.81 s at sf1.
-    from pipegen_spark.operators.spill import spill_to_parquet
-
     doc_bucket = spill_to_parquet(
         feats.groupBy("id", "_t", "bucket").agg(
             F.count("*").alias("cnt")
@@ -1158,8 +1157,6 @@ def quality_threshold_gate(
     so it carries a hard DuckDB oracle.
     """
     from pipegen_spark.operators import text as tx
-
-    from pipegen_spark.operators.spill import spill_to_parquet
 
     if not 0 <= keep_frac_ppm <= PCT_PPM:
         raise ValueError(
@@ -2024,22 +2021,25 @@ def doremi_weights(
     )
     # Truncate lineage at the k-row domain frame (pagerank_fixed's
     # discipline): every MW round hangs frame-wide scalars off this
-    # frame, and without the checkpoint each round re-executes the whole
+    # frame, and without the spill each round re-executes the whole
     # corpus classifier aggregate upstream — measured 21.6 s -> ~7 s
-    # cold at sf0.01. At cluster scale use durable checkpoint().
+    # cold at sf0.01.
     # `best` is an unpartitioned window max (r13), not a broadcast
     # 1-row aggregate: same BIGINT value, but the k-row frame crosses
     # ONE single-partition exchange instead of referencing the corpus
     # aggregate subtree twice (agg side + join side).
-    dom = per.select(
-        source_col,
-        "n_docs",
-        F.least(
-            F.max("mean_micro").over(Window.partitionBy())
-            - F.col("mean_micro"),
-            F.lit(DOREMI_LOSS_CAP).cast("long"),
-        ).alias("loss_micro"),
-    ).localCheckpoint(eager=True)
+    dom = spill_to_parquet(
+        per.select(
+            source_col,
+            "n_docs",
+            F.least(
+                F.max("mean_micro").over(Window.partitionBy())
+                - F.col("mean_micro"),
+                F.lit(DOREMI_LOSS_CAP).cast("long"),
+            ).alias("loss_micro"),
+        ),
+        label="doremi",
+    )
     # r13 (guide §2.4 "share one exchange", §1.2): every MW round needs
     # two FRAME-WIDE scalars (the mixture loss lbar and the raw-weight
     # normalizer). The previous shape computed each as a 1-row aggregate
@@ -2049,7 +2049,7 @@ def doremi_weights(
     # An UNPARTITIONED window aggregate (`SUM(..) OVER ()`) computes the
     # identical BIGINT sum over the identical k-row frame, and every
     # round's windows share the ONE single-partition exchange over the
-    # checkpointed domain frame — the whole MW unroll is a single job
+    # spilled domain frame — the whole MW unroll is a single job
     # (measured: ~8 jobs / ~1.5 s; byte-identical output). k = domain
     # count, so the single partition holds k rows at any corpus scale.
     # Documented assumption (r13 ADVICE): the 1e6 fixed-point base means

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pipegen_spark.functions import dialect as dl
+from pipegen_spark.operators.spill import spill_to_parquet
 
 # Fixed-point scale for exact centroid means: floor(x*SCALE + 0.5) as LONG.
 # Integer sums are associative, so the mean is partitioning-independent.
@@ -247,6 +248,58 @@ def kmeans_centroids(
     return cents
 
 
+def _prune_within_clusters(
+    assigned: DataFrame, threshold: float, id_col: str, dim: int | None
+) -> DataFrame:
+    """SemDeDup's pair pass over an (id, cluster_id, v) assignment: each
+    vector counts the lower-id vectors of its cluster at cosine >=
+    `threshold`. Output (id_col, cluster_id, n_sem_dups,
+    is_semantic_dup)."""
+    # The assignment feeds two consumers (the pair pass + the final
+    # output); spilling it runs the iterative k-means chain once.
+    # The L2 norm is hoisted HERE, per vector, not computed per pair:
+    # (a) O(n) norm chains instead of O(pairs), and (b) the full cosine —
+    # dot + two norms, 3*dim unrolled element_at terms — overflows Janino's
+    # 64 KB method limit inside the join's codegen'd consume function,
+    # silently dropping the whole stage to interpreted mode. dot alone
+    # fits. sqrt(norm2_a)*sqrt(norm2_b) is the same IEEE computation either
+    # side of the join, so results are bit-identical to the inline form.
+    dim_expr = dim if dim is not None else dl.size("v", dl.SPARK)
+    nrm = f"sqrt({dl.norm2_double('v', dim_expr, dl.SPARK)})"
+    a = spill_to_parquet(
+        assigned.select("id", "cluster_id", "v").withColumn("nrm", F.expr(nrm)),
+        label="semdedup",
+    )
+    left = a.select(
+        F.col("id").alias("id_a"),
+        F.col("v").alias("va"),
+        F.col("nrm").alias("na"),
+        "cluster_id",
+    )
+    right = a.select(
+        F.col("id").alias("id_b"),
+        F.col("v").alias("vb"),
+        F.col("nrm").alias("nb"),
+        "cluster_id",
+    )
+    pair_dim = dim if dim is not None else dl.size("va", dl.SPARK)
+    cos = f"({dl.dot_double('va', 'vb', pair_dim, dl.SPARK)}) / (na * nb)"
+    dups = (
+        left.join(right, "cluster_id")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(F.expr(f"({cos}) >= {threshold}"))
+        .groupBy(F.col("id_b").alias("id"))
+        .agg(F.count("*").alias("n_sem_dups"))
+    )
+    n = F.coalesce(F.col("n_sem_dups"), F.lit(0)).cast("long")
+    return a.join(dups, "id", "left").select(
+        F.col("id").alias(id_col),
+        "cluster_id",
+        n.alias("n_sem_dups"),
+        (n > 0).alias("is_semantic_dup"),
+    )
+
+
 def semantic_dedup(
     base: DataFrame,
     init_pred,
@@ -287,59 +340,7 @@ def semantic_dedup(
     for _ in range(iters - 1):
         cents = _lloyd_update(assigned)
         assigned = _assign(vecs, cents, dim)
-    # The assignment feeds two consumers (the pair pass + the final
-    # output); persisting it runs the iterative k-means chain once.
-    #
-    # Cache LIFETIME (r9 verdict): the operator returns a lazy frame, so
-    # there is no action here to unpersist after — the CacheManager entry
-    # lives until the session drops it (it is not GC-reclaimed like RDD
-    # persists). Per-query that is correct; a long-lived session (the
-    # FAIR-pooled bench, a notebook) reclaims at its natural boundary via
-    # spark.catalog.clearCache() — bench.py does this between passes.
-    # The L2 norm is hoisted HERE, per vector, not computed per pair:
-    # (a) O(n) norm chains instead of O(pairs), and (b) the full cosine —
-    # dot + two norms, 3*dim unrolled element_at terms — overflows Janino's
-    # 64 KB method limit inside the join's codegen'd consume function,
-    # silently dropping the whole stage to interpreted mode. dot alone
-    # fits. sqrt(norm2_a)*sqrt(norm2_b) is the same IEEE computation either
-    # side of the join, so results are bit-identical to the inline form.
-    dim_expr = dim if dim is not None else dl.size("v", dl.SPARK)
-    nrm = f"sqrt({dl.norm2_double('v', dim_expr, dl.SPARK)})"
-    a = (
-        assigned.select("id", "cluster_id", "v")
-        .withColumn("nrm", F.expr(nrm))
-        .persist()
-    )
-    left = a.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-        "cluster_id",
-    )
-    right = a.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-        "cluster_id",
-    )
-    pair_dim = dim if dim is not None else dl.size("va", dl.SPARK)
-    cos = (
-        f"({dl.dot_double('va', 'vb', pair_dim, dl.SPARK)}) / (na * nb)"
-    )
-    dups = (
-        left.join(right, "cluster_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.expr(f"({cos}) >= {threshold}"))
-        .groupBy(F.col("id_b").alias("id"))
-        .agg(F.count("*").alias("n_sem_dups"))
-    )
-    n = F.coalesce(F.col("n_sem_dups"), F.lit(0)).cast("long")
-    return a.join(dups, "id", "left").select(
-        F.col("id").alias(id_col),
-        "cluster_id",
-        n.alias("n_sem_dups"),
-        (n > 0).alias("is_semantic_dup"),
-    )
+    return _prune_within_clusters(assigned, threshold, id_col, dim)
 
 
 def semantic_dedup_ivf(
@@ -457,45 +458,7 @@ def semantic_dedup_ivf(
             "v",
         )
     )
-    # Within-cluster keep-first pruning — semantic_dedup's pair pass,
-    # byte-for-byte (hoisted norms, codegen-safe dot; see there).
-    # Cache lifetime: session-scoped, same contract as semantic_dedup's
-    # persist above (no action inside the operator to unpersist after;
-    # long-lived sessions reclaim via spark.catalog.clearCache()).
-    nrm = f"sqrt({dl.norm2_double('v', dim_e, dl.SPARK)})"
-    a = (
-        assigned.select("id", "cluster_id", "v")
-        .withColumn("nrm", F.expr(nrm))
-        .persist()
-    )
-    left = a.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-        "cluster_id",
-    )
-    right = a.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-        "cluster_id",
-    )
-    pair_dim = dim if dim is not None else dl.size("va", dl.SPARK)
-    cos = f"({dl.dot_double('va', 'vb', pair_dim, dl.SPARK)}) / (na * nb)"
-    dups = (
-        left.join(right, "cluster_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.expr(f"({cos}) >= {threshold}"))
-        .groupBy(F.col("id_b").alias("id"))
-        .agg(F.count("*").alias("n_sem_dups"))
-    )
-    n = F.coalesce(F.col("n_sem_dups"), F.lit(0)).cast("long")
-    return a.join(dups, "id", "left").select(
-        F.col("id").alias(id_col),
-        "cluster_id",
-        n.alias("n_sem_dups"),
-        (n > 0).alias("is_semantic_dup"),
-    )
+    return _prune_within_clusters(assigned, threshold, id_col, dim)
 
 
 def pq_subdist_expr(
@@ -1056,16 +1019,16 @@ def top_direction(
     g = gram_matrix(df, vec_col, dim).select(
         F.col("dim_i").alias("i"), F.col("dim_j").alias("j"), "gram"
     )
-    full = (
+    # d*d rows; truncating here keeps the per-round 1-row aggregates
+    # from re-executing the corpus Gram pass (the doremi_weights
+    # discipline).
+    full = spill_to_parquet(
         g.unionByName(
             g.filter(F.col("i") != F.col("j")).select(
                 F.col("j").alias("i"), F.col("i").alias("j"), "gram"
             )
-        )
-        # d*d rows; truncating here keeps the per-round 1-row aggregates
-        # from re-executing the corpus Gram pass (the doremi_weights
-        # discipline). At cluster scale use durable checkpoint().
-        .localCheckpoint(eager=True)
+        ),
+        label="gram",
     )
     v = full.select(F.col("i").alias("k")).distinct().select(
         "k", F.lit(POWER_SCALE).cast("long").alias("v")

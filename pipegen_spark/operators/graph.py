@@ -58,20 +58,6 @@ def pagerank_fixed(
     # re-executes that whole upstream plan (measured: 5.4 s -> 4.1 s
     # warm at sf0.1 on the supply graph — the remaining cost is the
     # fixed per-stage floor of the unrolled rounds).
-    #
-    # Round-11: the cut is a PARQUET SPILL (write once, scan per
-    # round), not localCheckpoint. Unlike every other graph operator
-    # here, THIS edge frame is O(fact table), not O(near-dup pairs) —
-    # and localCheckpoint pins the rows in the JVM as deserialized
-    # block objects that clearCache() never reclaims, which OOMed an
-    # 8 GiB heap at the x100 scale rung (~110 M symmetric edges:
-    # GCLocker thrash, then heap death — the r11 scale-ladder
-    # attempt). A columnar spill file keeps the truncated lineage and
-    # the scan-per-round reuse at IDENTICAL wall cost (A/B measured
-    # 3.1-4.1 s vs 3.4-4.3 s on the sf0.1 supply graph) with ZERO heap
-    # footprint at any scale — and it is literally the durable
-    # checkpoint() shape a real cluster deployment uses, just on
-    # local disk.
     edges = spill_to_parquet(edges.select(src, dst), label="graph")
     nodes = (
         edges.select(src.alias("id"))
@@ -117,7 +103,7 @@ def pagerank_fixed(
             # a measured A/B showed per-round eager checkpoints cost more
             # in extra jobs than they save (4.1 s -> 5.1 s warm at
             # sf0.1). For many more iterations (or big rank frames),
-            # checkpoint every K rounds.
+            # spill every K rounds.
         )
     return ranks.select("id", F.col("r").alias("rank_micro"))
 
@@ -150,10 +136,10 @@ def cc_star_labels(
       child and all its smaller neighbors to their minimum.
     Both shuffles key on the star center, and the min-aggregate is
     map-side partial — shuffle volume is O(|E|) ids per round, never
-    documents. The edge frame is localCheckpoint-ed every round (the
-    frame typically SHRINKS as stars collapse; at cluster scale use
-    durable checkpoint() instead) and convergence is a single scalar
-    count of non-star edges — no driver-side edge materialization.
+    documents. The edge frame is spilled every round (the frame
+    typically SHRINKS as stars collapse) and convergence is a single
+    scalar count of non-star edges over the spill — no driver-side
+    edge materialization.
     Deterministic: every step is a MIN.
     """
     if max_rounds < 1:
@@ -163,14 +149,14 @@ def cc_star_labels(
     # Canonical (child, parent) orientation, child > parent; self-loops
     # dropped. The input pair list is usually the tail of an expensive
     # pipeline (LSH banding + verify) — materialize it once.
-    e = (
+    e = spill_to_parquet(
         pairs.select(
             F.greatest(F.col(a_col), F.col(b_col)).cast("long").alias("c"),
             F.least(F.col(a_col), F.col(b_col)).cast("long").alias("p"),
         )
         .filter(F.col("c") != F.col("p"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        label="cc",
     )
     for _ in range(max_rounds):
         # Large-star: symmetric neighborhoods; m = min(N(u) ∪ {u}) which
@@ -185,7 +171,7 @@ def cc_star_labels(
         # The intermediate distinct is NOT redundant in practice: an A/B
         # without it (relying on the small-star MIN being duplicate-
         # insensitive and the terminal distinct) measured marginally
-        # SLOWER (1.78 s vs 1.59 s warm at sf0.1 on the checkpointed
+        # SLOWER (1.78 s vs 1.59 s warm at sf0.1 on the materialised
         # pair set) — duplicate inflation through the small-star join
         # costs more than the dedup shuffle saves. Same A/B showed an
         # every-2-rounds convergence cadence saves nothing here (star
@@ -201,22 +187,13 @@ def cc_star_labels(
         # Small-star: group the (child > parent) edges by child; attach
         # the child and every smaller neighbor to the minimum parent.
         smins = large.groupBy("c").agg(F.min("p").alias("m"))
-        small = (
+        small = spill_to_parquet(
             large.join(smins, "c")
             .select(F.col("p").alias("c"), F.col("m").alias("p"))
             .filter(F.col("c") != F.col("p"))
             .unionByName(smins.select(F.col("c"), F.col("m").alias("p")))
-            .distinct()
-            # LAZY checkpoint (r13, guide §1.2): the convergence count
-            # below is the materializing action, so checkpoint + count
-            # cost one job per round instead of two. The count's
-            # semi-join references `small` twice; the two branches can
-            # compute some partitions concurrently before they persist
-            # (duplicate work within the materializing job), which is
-            # harmless — partition contents are deterministic as sets
-            # and every consumer is order-insensitive — and cheaper
-            # than eager=True's extra per-round job in the measured A/B.
-            .localCheckpoint(eager=False)
+            .distinct(),
+            label="cc",
         )
         # Converged when every edge already points at a star center: no
         # child is also a parent. One scalar semi-join count.
@@ -287,9 +264,8 @@ def triangle_counts(
     # sides + the closing edge); without a cut, Spark re-executes the
     # upstream pair pipeline (often an expensive MinHash chain) once per
     # branch. Materialize it — edges are O(near-dup pairs), orders of
-    # magnitude smaller than the corpus (the pagerank edge discipline;
-    # at cluster scale use durable checkpoint()).
-    e = e.localCheckpoint(eager=True)
+    # magnitude smaller than the corpus (the pagerank edge discipline).
+    e = spill_to_parquet(e, label="triangles")
     wedges = (
         e.alias("x")
         .join(e.alias("y"), F.col("x.b") == F.col("y.a"))
@@ -357,19 +333,16 @@ def label_propagation_fixed(
 
     Shape (100 TB): per round ONE aggregate keyed on (dst, lbl) and one
     on dst — both map-side partial; shuffle volume is O(|E|) label
-    messages per round, never documents. The EDGE frame is
-    localCheckpoint-ed once (it is the tail of an expensive LSH
-    pipeline); the label frame is NOT barriered per round — each round
-    references the previous labels exactly once, so the unrolled plan
-    grows linearly over the checkpointed edges and stays lazy
-    (measured: per-round eager checkpoints cost 9.5 s vs 2.5 s cold at
-    sf0.1 — four serialized round-trips for nothing). For LONG round
-    counts `checkpoint_every` bounds plan depth (and at cluster scale
-    should be a durable checkpoint()).
+    messages per round, never documents. The EDGE frame is spilled
+    once (it is the tail of an expensive LSH pipeline); the label frame
+    is NOT barriered per round — each round references the previous
+    labels exactly once, so the unrolled plan grows linearly over the
+    spilled edges and stays lazy (measured: per-round eager checkpoints
+    cost 9.5 s vs 2.5 s cold at sf0.1 — four serialized round-trips for
+    nothing).
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    checkpoint_every = 8
     edges = (
         pairs.select(
             F.col(a_col).cast("long").alias("src"),
@@ -378,19 +351,18 @@ def label_propagation_fixed(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    edges = (
+    edges = spill_to_parquet(
         edges.unionByName(
             edges.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst")
             )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct(),
+        label="lpa",
     )
     labels = edges.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("lbl")
     )
-    for r in range(rounds):
+    for _ in range(rounds):
         msgs = (
             edges.join(labels.withColumnRenamed("id", "src"), "src")
             .groupBy("dst", "lbl")
@@ -408,6 +380,4 @@ def label_propagation_fixed(
             )
             .select(F.col("dst").alias("id"), F.col("m.lbl").alias("lbl"))
         )
-        if (r + 1) % checkpoint_every == 0 and r + 1 < rounds:
-            labels = labels.localCheckpoint(eager=True)
     return labels

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pipegen_spark.functions import dialect as dl
+from pipegen_spark.operators.spill import spill_to_parquet
 
 
 def _cos(va: str, vb: str, dim: int | None = None) -> F.Column:
@@ -1064,7 +1065,9 @@ def mmr_rerank(
     in the IVF/PQ path at scale); everything after operates on
     n_candidates rows — the n^2 pairwise-similarity frame and the k
     unrolled selection steps are all constant-size work, broadcast
-    joins only, nothing driver-side but the loop structure.
+    joins only. The driver holds the selection: each step collects its
+    one winning row, the next step filters on the selected ids, and the
+    output is built from the collected rows (exact doubles).
     """
     # Single-query contract: the candidate frame drops query_id below, so
     # a multi-row `queries` would silently blend every query's candidates
@@ -1084,51 +1087,47 @@ def mmr_rerank(
     emb = base.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v")
     )
-    c = cand.join(F.broadcast(emb), "neighbor_id").localCheckpoint(
-        eager=True
-    )
+    c = cand.join(F.broadcast(emb), "neighbor_id")
+    # Every ordered candidate pair with the first one's relevance (the
+    # self-pairs let the first step see every candidate), materialised
+    # once: every step reads only this frame.
     a = c.select(
-        F.col("neighbor_id").alias("ida"), F.col("v").alias("va")
+        F.col("neighbor_id").alias("ida"), "cos", F.col("v").alias("va")
     )
     b = c.select(
         F.col("neighbor_id").alias("idb"), F.col("v").alias("vb")
     )
-    pair = (
-        a.join(F.broadcast(b), F.col("ida") != F.col("idb"))
-        .select("ida", "idb", _cos("va", "vb", dim).alias("sim"))
-        .localCheckpoint(eager=True)
+    pair = spill_to_parquet(
+        a.crossJoin(F.broadcast(b)).select(
+            "ida", "cos", "idb", _cos("va", "vb", dim).alias("sim")
+        ),
+        label="mmr-pair",
     )
     lam_n, lam_d = MMR_LAMBDA_NUM, MMR_LAMBDA_DEN
-    sel = (
-        c.orderBy(F.col("cos").desc(), "neighbor_id")
-        .limit(1)
-        .select(
-            F.lit(1).cast("long").alias("rank"),
-            "neighbor_id",
-            "cos",
-            F.col("cos").alias("mmr"),
-        )
+    mmr = F.expr(
+        f"({lam_n} * cos - {lam_d - lam_n} * coalesce(maxsim, 0.0))"
+        f" / {lam_d}.0"
     )
-    for step in range(2, k + 1):
-        rem = c.join(sel.select("neighbor_id"), "neighbor_id", "left_anti")
-        pen = (
-            pair.join(
-                sel.select(F.col("neighbor_id").alias("idb")),
-                "idb",
-                "left_semi",
-            )
-            .groupBy(F.col("ida").alias("neighbor_id"))
-            .agg(F.max("sim").alias("maxsim"))
-        )
+    # The greedy unroll is inherently sequential: one collect per step is
+    # its floor. Holding the selection on the driver keeps every step's
+    # plan the same size (a lazy unroll doubles it through the anti/semi
+    # joins each step; measured 2.4 -> 4.5 s warm at sf0.1), and the
+    # selected ids reach the next step as literals. Step 1 scores by
+    # relevance alone (mmr = cos); later steps penalise each remaining
+    # candidate by its largest similarity to a selected one.
+    rows = []
+    for step in range(1, k + 1):
+        ids = [r["neighbor_id"] for r in rows]
+        pen = pair.filter(~F.col("ida").isin(ids))
+        if rows:
+            pen = pen.filter(F.col("idb").isin(ids))
         nxt = (
-            rem.join(F.broadcast(pen), "neighbor_id", "left")
+            pen.groupBy(F.col("ida").alias("neighbor_id"), "cos")
+            .agg(F.max("sim").alias("maxsim"))
             .select(
                 "neighbor_id",
                 "cos",
-                F.expr(
-                    f"({lam_n} * cos - {lam_d - lam_n} * "
-                    f"coalesce(maxsim, 0.0)) / {lam_d}.0"
-                ).alias("mmr"),
+                (mmr if rows else F.col("cos")).alias("mmr"),
             )
             .orderBy(F.col("mmr").desc(), "neighbor_id")
             .limit(1)
@@ -1139,13 +1138,16 @@ def mmr_rerank(
                 "mmr",
             )
         )
-        # Per-step eager checkpoint, kept after an r13 A/B: the lazy
-        # variant (no checkpoint, 2^step plan copies through the
-        # anti/semi joins) measured WORSE — 2.4 -> 4.5 s warm at sf0.1
-        # — because Catalyst re-analysis of the doubling plan costs
-        # more than k-1 tiny checkpoint jobs save. The greedy unroll is
-        # inherently sequential; one job per step is its floor.
-        sel = sel.unionByName(nxt).localCheckpoint(eager=True)
+        rows += nxt.collect()
+    # The output is built from the held rows as literals (a one-row JVM
+    # scan, doubles bit for bit); with no candidates `nxt` is empty.
+    lits = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                   for v, f in zip(r, nxt.schema)])
+        for r in rows
+    ]
+    one = c.sparkSession.range(1, numPartitions=1)
+    sel = one.select(F.inline(F.array(*lits))) if rows else nxt
     micro = "CAST(floor({x} * 1000000.0 + 0.5) AS BIGINT)"
     return sel.select(
         "rank",

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pipegen_spark.functions import dialect as dl
+from pipegen_spark.operators.spill import spill_to_parquet
 
 # Language wordlists for the n-gram/stopword language-ID heuristic.
 # Order = tie-break priority (first wins on equal scores).
@@ -1937,8 +1938,6 @@ def entropy_scores(
     norm_entropy_ppm); tokenless docs -> all zeros, single-type docs
     -> entropy 0 with norm 0 (log2(1) = 0 denominator guarded)."""
     scale = 1 << LOG2_FRAC_BITS
-    from pipegen_spark.operators.spill import spill_to_parquet
-
     tok = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.expr(dl.words(text_col, dl.SPARK))).alias("t"),
@@ -2066,8 +2065,6 @@ def kl_drift_scores(
 
     Output: (source, n_tokens, n_types, kl_milli_bits), sorted."""
     scale = 1 << LOG2_FRAC_BITS
-    from pipegen_spark.operators.spill import spill_to_parquet
-
     tok = df.select(
         F.col(source_col).alias("src"),
         F.explode(F.expr(dl.words(text_col, dl.SPARK))).alias("t"),

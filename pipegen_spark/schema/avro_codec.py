@@ -15,10 +15,10 @@ Two codecs share that encoding:
   matching goavro's default behavior for the subset the reference
   generates.
 - `ColumnPlan`: a flat record schema (primitives, `["null", primitive]`
-  unions, `date` and `timestamp-micros`) compiled once, then encoded from
-  and decoded to Arrow columns with numpy, a field of every row per
-  pass. It writes and reads the same bytes and values as `AvroCodec`,
-  which stays as its test oracle.
+  unions, `date`, `timestamp-millis` and `timestamp-micros`) compiled
+  once, then encoded from and decoded to Arrow columns with numpy, a
+  field of every row per pass. It writes and reads the same bytes and
+  values as `AvroCodec`, which stays as its test oracle.
 
 `encode_table` / `decode_table` pick the plan when the schema compiles
 and `AvroCodec` otherwise.
@@ -352,9 +352,10 @@ class AvroCodec:
 #: flat record carries.
 _PLAN_LOGICAL = {
     ("int", "date"): "date",
+    ("long", "timestamp-millis"): "timestamp-millis",
     ("long", "timestamp-micros"): "timestamp-micros",
 }
-_VARINT_KINDS = ("int", "long", "date", "timestamp-micros")
+_VARINT_KINDS = ("int", "long", "date", "timestamp-millis", "timestamp-micros")
 _FLOAT_DTYPES = {"float": "<f4", "double": "<f8"}
 
 
@@ -378,6 +379,7 @@ _ARROW_TYPES = {
     "bytes": pa.binary(),
     "string": pa.string(),
     "date": pa.date32(),
+    "timestamp-millis": pa.timestamp("ms", tz="UTC"),
     "timestamp-micros": pa.timestamp("us", tz="UTC"),
 }
 _VARLEN_TYPES = (pa.string(), pa.large_string(), pa.binary(), pa.large_binary())
@@ -385,7 +387,7 @@ _VARLEN_TYPES = (pa.string(), pa.large_string(), pa.binary(), pa.large_binary())
 
 class ColumnPlan:
     """A flat record schema compiled once into columns: per field its
-    name, kind (a primitive, `date` or `timestamp-micros`) and whether
+    name, kind (a primitive, `date` or a `timestamp-*`) and whether
     it is a `["null", kind]` union. Encodes Arrow columns to Avro
     bodies and decodes bodies to Arrow columns a field at a time, with
     the bytes and values of `AvroCodec`. `compile` returns None for any
@@ -519,12 +521,14 @@ def _binary_array(offsets: np.ndarray, data: np.ndarray, typ=None, validity=None
     )
 
 
-def _int64s(arr) -> np.ndarray:
-    """int64 values of an integer, date or timestamp column (micros)."""
+def _int64s(arr, kind: str) -> np.ndarray:
+    """int64 values of an integer, date or timestamp column (a timestamp
+    in the unit of `kind`: millis or micros)."""
     t = arr.type
     if pa.types.is_timestamp(t):
-        if t.unit != "us":
-            arr = arr.cast(pa.timestamp("us", t.tz), safe=False)
+        unit = "ms" if kind == "timestamp-millis" else "us"
+        if t.unit != unit:
+            arr = arr.cast(pa.timestamp(unit, t.tz), safe=False)
         return _fixed_values(arr, np.int64)
     if pa.types.is_date32(t):
         return _fixed_values(arr, np.int32).astype(np.int64)
@@ -542,7 +546,7 @@ def _encode_column(arr, kind: str, valid) -> list[tuple]:
         return lens if valid is None else np.where(valid, lens, 0)
 
     if kind in _VARINT_KINDS:
-        mat, lens = encode_varints(_int64s(arr))
+        mat, lens = encode_varints(_int64s(arr, kind))
         return [(mat, mask(lens))]
     if kind in _FLOAT_DTYPES:
         dtype = np.dtype(_FLOAT_DTYPES[kind])
@@ -627,8 +631,11 @@ def encode_table(table, schema, prefix: bytes = b""):
     if isinstance(table, pa.RecordBatch):
         table = pa.Table.from_batches([table])
     codec = AvroCodec(schema)
-    native = pa.struct([f.with_type(_native_type(f.type)) for f in table.schema])
-    rows = _py_value(table.cast(pa.schema(native)).to_pylist(), pa.list_(native))
+    units, native = _native_schemas(table.schema, codec)
+    rows = _py_value(
+        table.cast(units, safe=False).cast(native).to_pylist(),
+        pa.list_(pa.struct(list(native))),
+    )
     return pa.array([prefix + codec.encode(r) for r in rows], pa.binary())
 
 
@@ -642,10 +649,10 @@ def decode_table(frames, schema, target, skip: int = 0):
         table = plan.decode(frames, skip)
     else:
         codec = AvroCodec(schema)
-        native = pa.schema([f.with_type(_native_type(f.type)) for f in target])
+        units, native = _native_schemas(target, codec)
         table = pa.Table.from_pylist(
             [codec.decode(v, skip) for v in frames.to_pylist()], schema=native
-        )
+        ).cast(units)
     return pa.Table.from_arrays(
         [
             table.column(f.name).cast(f.type)
@@ -657,20 +664,47 @@ def decode_table(frames, schema, target, skip: int = 0):
     )
 
 
-def _native_type(t):
-    """`t` with dates as int32 days and timestamps as int64 micros, the
-    values `AvroCodec` reads and writes for those logical types."""
+def _native_type(t, avro, named: dict, ints: bool = True):
+    """Arrow type `t` as `AvroCodec` reads and writes it for the Avro
+    type `avro` (`named`: its named types): dates as int32 days,
+    timestamps as int64 millis for `timestamp-millis` and micros
+    otherwise, or with `ints=False` as Arrow timestamps in that unit."""
+    if isinstance(avro, list):  # a union: its one non-null branch
+        branches = [b for b in avro if b != "null"]
+        avro = branches[0] if len(branches) == 1 else None
+    if isinstance(avro, str):
+        avro = named.get(avro)
+    if isinstance(avro, dict) and isinstance(avro.get("type"), (dict, list)):
+        return _native_type(t, avro["type"], named, ints)
+    avro = avro if isinstance(avro, dict) else {}
+
+    def inner(sub_t, key):
+        return _native_type(sub_t, avro.get(key), named, ints)
+
     if pa.types.is_timestamp(t):
-        return pa.int64()
+        millis = avro.get("logicalType") == "timestamp-millis"
+        return pa.int64() if ints else pa.timestamp("ms" if millis else "us", t.tz)
     if pa.types.is_date32(t):
         return pa.int32()
     if pa.types.is_map(t):
-        return pa.map_(t.key_type, _native_type(t.item_type))
+        return pa.map_(t.key_type, inner(t.item_type, "values"))
     if pa.types.is_list(t):
-        return pa.list_(t.value_field.with_type(_native_type(t.value_type)))
+        return pa.list_(t.value_field.with_type(inner(t.value_type, "items")))
     if pa.types.is_struct(t):
-        return pa.struct([f.with_type(_native_type(f.type)) for f in t])
+        types = {f["name"]: f["type"] for f in avro.get("fields", [])}
+        return pa.struct(
+            [f.with_type(_native_type(f.type, types.get(f.name), named, ints))
+             for f in t]
+        )
     return t
+
+
+def _native_schemas(schema: pa.Schema, codec: AvroCodec):
+    """(timestamps in their Avro unit, fully native) schemas of `schema`."""
+    t = pa.struct(list(schema))
+    units = _native_type(t, codec.schema, codec._named, ints=False)
+    native = _native_type(t, codec.schema, codec._named)
+    return pa.schema(list(units)), pa.schema(list(native))
 
 
 def _py_value(value, t):

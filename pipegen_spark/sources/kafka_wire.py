@@ -1310,18 +1310,23 @@ class _Log:
         return base
 
     def read_v2(self, offset: int, max_bytes: int | None = None) -> bytes:
-        """Re-frame the log tail from `offset` as one RecordBatch. When
-        `max_bytes` is given, frame only the longest prefix of WHOLE
-        records that fits — but always at least one (KIP-74: a fetch
-        must return the first batch complete even when it exceeds
-        max_bytes, else a client with a small fetch size can never make
-        progress). Byte-slicing a single re-framed batch would hand the
-        client a partial batch that decode_record_batches silently
-        drops. Record sizes do not depend on how many records follow,
-        so one encode of the tail prices every prefix."""
+        """Re-frame the log tail from `offset` as one RecordBatch. Under
+        `max_bytes`, frame the longest prefix of WHOLE records that fits,
+        but at least one (KIP-74: a client with a small fetch size must
+        still make progress, and a byte-sliced batch would be dropped by
+        decode_record_batches). An encoded record is never smaller than
+        its key and value, so only the records whose raw bytes fit, plus
+        one, are encoded; a drain in small fetches stays linear."""
         if offset < 0 or offset > len(self.records):
             raise IndexError
-        tail = self.records[offset:]
+        end = len(self.records)
+        if max_bytes is not None:
+            budget, end = max_bytes - BATCH_OVERHEAD, offset
+            while end < len(self.records) and (budget >= 0 or end == offset):
+                key, value = self.records[end][:2]
+                budget -= len(key or b"") + len(value or b"")
+                end += 1
+        tail = self.records[offset:end]
         if not tail:
             return b""
         base_ts = tail[0][2]

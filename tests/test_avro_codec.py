@@ -254,6 +254,7 @@ _KINDS = {
     "bytes": "bytes",
     "string": "string",
     "date": {"type": "int", "logicalType": "date"},
+    "timestamp-millis": {"type": "long", "logicalType": "timestamp-millis"},
     "timestamp-micros": {"type": "long", "logicalType": "timestamp-micros"},
 }
 
@@ -283,8 +284,9 @@ _VALUES = {
     "double": st.floats(allow_nan=False),
     "bytes": st.binary(max_size=20),
     "string": st.one_of(st.just(""), st.text(max_size=12)),
-    # days and micros since the epoch, 1970 and before included
+    # days, millis and micros since the epoch, 1970 and before included
     "date": _int_values(32),
+    "timestamp-millis": _int_values(64),
     "timestamp-micros": _int_values(64),
 }
 
@@ -317,7 +319,8 @@ def _flat_records(draw, min_nullable: int = 0):
 
 def _arrow_table(plan, rows):
     """The rows as Arrow columns of the plan's decoded types (dates and
-    timestamps built from their day and microsecond counts)."""
+    timestamps built from their day, millisecond and microsecond
+    counts)."""
     import pyarrow as pa
 
     from pipegen_spark.schema.avro_codec import _ARROW_TYPES
@@ -328,7 +331,7 @@ def _arrow_table(plan, rows):
         values = [r[name] for r in rows]
         if kind == "date":
             cols[name] = pa.array(values, pa.int32()).cast(typ)
-        elif kind == "timestamp-micros":
+        elif kind.startswith("timestamp-"):
             cols[name] = pa.array(values, pa.int64()).cast(typ)
         else:
             cols[name] = pa.array(values, typ)
@@ -424,7 +427,7 @@ def test_column_plan_bad_union_branch_raises_like_avro_codec(schema_rows, branch
         {"type": "record", "name": "Sub", "fields": [{"name": "x", "type": "int"}]},
         ["null", "string", "long"],
         ["string", "null"],
-        {"type": "long", "logicalType": "timestamp-millis"},
+        {"type": "long", "logicalType": "local-timestamp-millis"},
     ],
 )
 def test_column_plan_declines_what_it_does_not_cover(field_type):
@@ -496,3 +499,56 @@ def test_nested_and_array_schemas_fall_back_to_avro_codec():
         for i, t, c, m in zip([1, -2], [["a", "b"], []], [{"k": 7}, {}], micros)
     ]
     assert decode_table(frames, schema, table.schema, skip=5).equals(table)
+
+
+def test_timestamp_millis_is_written_as_millis():
+    """A `timestamp-millis` field carries epoch milliseconds on the wire,
+    through the column plan (flat record) and the row fallback (nested
+    record, a named-type reference and an array included), and decodes
+    back to the same instant."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from pipegen_spark.schema.avro_codec import (
+        column_plan,
+        decode_table,
+        encode_table,
+    )
+
+    millis = {"type": "long", "logicalType": "timestamp-millis"}
+    at = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    us = pa.timestamp("us", tz="UTC")
+    flat = {"type": "record", "name": "R", "fields": [
+        {"name": "at", "type": millis},
+        {"name": "maybe", "type": ["null", millis]},
+    ]}
+    assert column_plan(flat) is not None
+    table = pa.table({"at": pa.array([at], us), "maybe": pa.array([at], us)})
+    frames = encode_table(table, flat)
+    assert AvroCodec(flat).decode(frames[0].as_py()) == {
+        "at": 1704067200000, "maybe": 1704067200000,
+    }
+    assert decode_table(frames, flat, table.schema).equals(table)
+
+    nested = {"type": "record", "name": "N", "fields": [
+        {"name": "sub", "type": {"type": "record", "name": "Sub", "fields": [
+            {"name": "at", "type": ["null", millis]},
+        ]}},
+        {"name": "again", "type": "Sub"},
+        {"name": "ats", "type": {"type": "array", "items": millis}},
+    ]}
+    assert column_plan(nested) is None
+    sub = pa.struct([("at", us)])
+    table = pa.table({
+        "sub": pa.array([{"at": at}], sub),
+        "again": pa.array([{"at": at}], sub),
+        "ats": pa.array([[at]], pa.list_(us)),
+    })
+    frames = encode_table(table, nested)
+    assert AvroCodec(nested).decode(frames[0].as_py()) == {
+        "sub": {"at": 1704067200000},
+        "again": {"at": 1704067200000},
+        "ats": [1704067200000],
+    }
+    assert decode_table(frames, nested, table.schema).equals(table)

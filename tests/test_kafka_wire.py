@@ -457,6 +457,32 @@ def test_fetch_v4_max_bytes_returns_whole_records():
     assert len(recs) == 1 and recs[0][3] == b"x" * 5000
 
 
+def test_small_fetch_drain_encodes_a_bounded_prefix(monkeypatch):
+    """A fetch encodes only the records whose raw bytes fit max_bytes,
+    plus one, not the whole tail: draining a log in small fetches
+    encodes at most twice its records. A fetch that fits the whole tail
+    answers the same bytes as an unbounded one."""
+    from pipegen_spark.sources import kafka_wire as kw
+
+    encoded = []
+    real = kw._encode_records
+
+    def counting(records, base_ts):
+        encoded.append(len(records))
+        return real(records, base_ts)
+
+    monkeypatch.setattr(kw, "_encode_records", counting)
+    log = kw._Log(records=[])
+    log.append([(b"k%d" % i, b"v" * (20 + i % 50), i, ()) for i in range(2000)])
+    got = 0
+    while got < 2000:
+        recs = decode_record_batches(log.read_v2(got, max_bytes=1024))
+        assert recs and recs[0][0] == got
+        got = recs[-1][0] + 1
+    assert len(encoded) > 50 and sum(encoded) <= 2 * 2000
+    assert log.read_v2(1990, max_bytes=1 << 20) == log.read_v2(1990)
+
+
 def test_record_batch_partial_tail_dropped():
     """A trailing partial batch (legal in Fetch v4 responses) is
     dropped; complete leading batches still decode."""

@@ -2026,12 +2026,109 @@ def test_quality_gate_materialized_and_lazy_forms_agree(spark):
     assert "Generate explode" not in plan, plan
 
 
-def test_spill_keep_bound_covers_concurrent_queries():
-    """r14: spill_to_parquet's retention must cover the pooled bench
-    pass — 8 concurrent queries with up to 3 spills each (pipeline_e2e
-    holds curate + kept + the gate's qgate spill). A cap of 4 (the r13
-    value) could reap a directory another running query still reads;
-    the bound now holds a full concurrent wave plus margin."""
+def _scope_dir(df):
+    """The scope directory a spilled frame reads its files from."""
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    return Path(urlparse(df.inputFiles()[0]).path).parents[1]
+
+
+def test_spill_scope_keeps_every_live_spill(spark):
+    """40 spills held live in one scope, made from 4 threads (more than
+    a pooled bench pass holds): every one still reads back hash-identical
+    rows until the scope closes. A count-based reaper that keeps the
+    newest 32 deletes the first ones here."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pipegen_spark.operators.spill import spill_scope, spill_to_parquet
+    from pipegen_spark.queries.canon import result_sha256
+
+    def frame(i):
+        return spark.range(i, i + 5).select("id", (F.col("id") * i).alias("x"))
+
+    def digest(df):
+        return result_sha256(df.columns, [tuple(r) for r in df.collect()])
+
+    with spill_scope():
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            spilled = list(
+                pool.map(lambda i: spill_to_parquet(frame(i), f"s{i}"), range(40))
+            )
+        got = [digest(df) for df in spilled]
+    assert got == [digest(frame(i)) for i in range(40)]
+
+
+def test_spill_scope_removes_its_directory_on_exit_and_on_raise(spark):
+    from pipegen_spark.operators.spill import spill_scope, spill_to_parquet
+
+    with spill_scope():
+        df = spill_to_parquet(spark.range(3), "ok")
+        d = _scope_dir(df)
+        assert d.is_dir() and df.count() == 3
+    assert not d.exists()
+    with pytest.raises(RuntimeError, match="boom"):
+        with spill_scope():
+            d = _scope_dir(spill_to_parquet(spark.range(3), "raises"))
+            raise RuntimeError("boom")
+    assert not d.exists()
+
+
+def test_unscoped_spill_outlives_scopes_until_exit(spark, monkeypatch):
+    """A spill made outside any scope goes to the session directory: a
+    scope opened and closed after it leaves it readable, and the exit
+    hook the session directory registers deletes it."""
+    import atexit
+
     from pipegen_spark.operators import spill as sp
 
-    assert sp._KEEP_SPILLS >= 24
+    hooks = []
+    monkeypatch.setattr(atexit, "register", hooks.append)
+    monkeypatch.setattr(sp, "_SESSION", sp._Scope(reap_at_exit=True))
+    outside = sp.spill_to_parquet(spark.range(4), "outside")
+    d = _scope_dir(outside)
+    with sp.spill_scope():
+        inside = sp.spill_to_parquet(spark.range(2), "inside")
+        assert _scope_dir(inside) != d
+    assert outside.count() == 4 and d.is_dir()
+    assert len(hooks) == 1
+    hooks[0]()
+    assert not d.exists()
+
+
+def test_spill_root_rule(tmp_path):
+    """Checkpoint dir first (any master), then on a local master the
+    first existing spark.local.dir, else TMPDIR; any other master
+    without a checkpoint dir is refused."""
+    import tempfile
+
+    from pipegen_spark.operators.spill import spill_root
+
+    local = str(tmp_path)
+    assert spill_root("local[4]", None, f"{local},/elsewhere") == local
+    assert spill_root("local[*]", None, "") == tempfile.gettempdir()
+    missing = str(tmp_path / "missing")
+    assert spill_root("local[4]", None, missing) == tempfile.gettempdir()
+    assert spill_root("local[4]", "file:/ckpt/a", local) == "file:/ckpt/a"
+    assert spill_root("yarn", "hdfs://nn:8020/ckpt/a", "") == "hdfs://nn:8020/ckpt/a"
+    with pytest.raises(ValueError, match="setCheckpointDir"):
+        spill_root("spark://host:7077", None, local)
+
+
+def test_spill_under_checkpoint_dir_is_deleted_through_hadoop_fs(
+    spark, tmp_path, monkeypatch
+):
+    """With a checkpoint dir the scope directory goes under it, as a
+    Hadoop URI, and is deleted through the Hadoop FileSystem. The
+    checkpoint dir is patched on the context object, never set on the
+    shared session."""
+    from pipegen_spark.operators.spill import spill_scope, spill_to_parquet
+
+    root = tmp_path / "ckpt"
+    sc = spark.sparkContext
+    monkeypatch.setattr(sc, "getCheckpointDir", lambda: root.as_uri())
+    with spill_scope():
+        df = spill_to_parquet(spark.range(3), "durable")
+        d = _scope_dir(df)
+        assert d.parent == root and df.count() == 3
+    assert not d.exists() and root.is_dir()

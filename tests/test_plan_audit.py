@@ -215,8 +215,8 @@ def test_new_round4_operator_plan_shapes(plans):
 
 
 def test_star_cc_and_setjoin_plan_shapes(plans):
-    # dedup_cc_star: the star rounds run over checkpointed edge frames
-    # (scan-from-RDD), so the corpus-facing plan is the finisher — the
+    # dedup_cc_star: the star rounds run over spilled edge frames
+    # (parquet scans), so the corpus-facing plan is the finisher — the
     # labels join must be a hash equi-join, never a nested loop over
     # documents.
     p = plans["dedup_cc_star"]

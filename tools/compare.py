@@ -40,6 +40,7 @@ def main():
     import duckdb
 
     import __spark_entry__ as entry_mod
+    from pipegen_spark.operators.spill import spill_scope
     from pipegen_spark.session import get_spark
 
     qs = entry_mod.queries()
@@ -81,9 +82,10 @@ def main():
             continue
         _t0 = _time.perf_counter()
         try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
-            scols = sdf.columns
+            with spill_scope():
+                sdf = fn(spark, sf_dir)
+                srows = sdf.collect()
+                scols = sdf.columns
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
